@@ -725,10 +725,10 @@ ORDER BY query_id, rank
     "exact rerank of bucket candidates — now FULLY oracle-checked "
     "(VERDICT r11 task 4b): md5-parity ±1 Rademacher planes with exact "
     "integer micro-unit sign sums make bucket assignment, the candidate "
-    "set, and the rerank hash-replayable in DuckDB (portable=True). "
+    "set, and the rerank hash-replayable in DuckDB. "
     "Operating point re-measured with the parity planes on the "
-    "near-random fixture: recall@10 = 0.76, identical to the Gaussian "
-    "construction's curve (BASELINE.md) — on isotropic random vectors "
+    "near-random fixture: recall@10 = 0.76, identical to the retired "
+    "Gaussian construction's curve (BASELINE.md) — on isotropic random vectors "
     "recall ~ 1-(1-(1-θ/π)^planes)^tables and neighbors sit at cosine "
     "≈ 0.28, so high recall is intrinsically expensive; clustered "
     "production embeddings sit far up the same curve at far lower cost "
@@ -742,7 +742,6 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_ann_topk(
         emb, queries, k=10, n_planes=5, n_tables=16, query_id_col="query_id",
         dim=64,  # embeddings fixture contract (FIXTURES.md) — no first() probe
-        portable=True,  # md5-parity planes — the DuckDB oracle's twin
     )
 
 
@@ -819,7 +818,7 @@ FROM embeddings
     "near-random fixture reaches recall 1.00 at a small candidate "
     "fraction (BASELINE.md clustered recall curve) — validating the "
     "claimed scale economics. Graduated to a FULL DuckDB oracle (r13, "
-    "VERDICT r12 task 2a): portable=True md5-parity planes over the "
+    "VERDICT r12 task 2a): md5-parity planes over the "
     "md5-replayed corpus (duck_clustered_cte) make bucket assignment, "
     "the candidate set, and the rerank hash-match exactly — the same "
     "construction that graduated ann_lsh_topk in r12. Retrieval quality "
@@ -841,7 +840,6 @@ def ann_lsh_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.lsh_ann_topk(
         emb, queries, k=10, n_planes=10, n_tables=16, query_id_col="query_id",
         dim=64,
-        portable=True,  # md5-parity planes — the DuckDB oracle's twin
     )
     rows = out.collect()
     emb.unpersist()
@@ -1291,7 +1289,7 @@ def _duck_kmeans_iter(i: int) -> str:
     """One unrolled Lloyd step of the DuckDB k-means twin: decimal-exact
     dots vs c{i-1}, argmax assignment (ties → smallest list_id), per-dim
     decimal-mean update with empty clusters keeping their previous
-    centroid, then normalization — mirrors kmeans_clusters_portable's
+    centroid, then normalization — mirrors kmeans_clusters'
     loop body expression for expression."""
     p = i - 1
     return f"""d{i} AS (
@@ -1354,7 +1352,7 @@ def _duck_kmeans_prefix(
 
 
 def _duck_kmeans_profile_sql(n_centroids: int, refine_iters: int) -> str:
-    """Full DuckDB twin of kmeans_clusters_portable + the per-cluster
+    """Full DuckDB twin of kmeans_clusters + the per-cluster
     profile aggregate (VERDICT r11 task 4a): unrolled Lloyd iterations
     exactly as embedding_pca_power_iteration / pagerank_fixed_point
     unroll theirs."""
@@ -1394,17 +1392,17 @@ FROM cosr GROUP BY list_id ORDER BY list_id
     oracle=_duck_kmeans_profile_sql(16, 2),
     tags=("llmops", "similarity", "clustering"),
     notes="Deterministic spherical k-means profile, now FULLY oracle-"
-    "checked (VERDICT r11 task 4a): kmeans_clusters_portable seeds from "
+    "checked (VERDICT r11 task 4a): kmeans_clusters seeds from "
     "the md5-parity (portable_hash64) order, runs 2 Lloyd iterations with "
     "every inner product / mean / norm a DECIMAL(38,10) sum, and the "
     "DuckDB twin unrolls the identical iterations (the pca_power_iteration "
     "discipline) — labels, sizes, and mean cosines hash-match exactly. "
-    "Labels drive diversity sampling/quotas; the same labels are IVF index "
-    "lists. The numpy-path kmeans_clusters remains the throughput variant.",
+    "Labels drive diversity sampling/quotas; the same trainer and labels "
+    "build the IVF index lists (ivf_topk, build_ivf_index).",
 )
 def embedding_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
-    labeled = similarity.kmeans_clusters_portable(
+    labeled = similarity.kmeans_clusters(
         emb, n_centroids=16, refine_iters=2
     )
     prof = (
@@ -1422,7 +1420,7 @@ def embedding_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("list_id")
     )
     # The profile is ≤16 rows by construction; materialize it here so the
-    # corpus-sized exploded cache inside kmeans_clusters_portable can be
+    # corpus-sized exploded cache inside kmeans_clusters can be
     # released deterministically (ADVICE r12) instead of lingering until
     # the ContextCleaner notices the plan is gone. Rebuilding from the
     # collected rows keeps the returned frame free of any reference to
@@ -1439,7 +1437,7 @@ def _duck_ivf_topk_sql(
     k: int,
     corpus_cte: str | None = None,
 ) -> str:
-    """Full DuckDB twin of ivf_topk(portable=True) (VERDICT r12 task 2b):
+    """Full DuckDB twin of ivf_topk (VERDICT r12 task 2b):
     the shared Lloyd unroll (_duck_kmeans_prefix — the trainer replay
     that made embedding_cluster_profile exact) yields c{last}; then one
     dot frame serves BOTH the corpus labels (rn = 1) and the query
@@ -1496,14 +1494,14 @@ ORDER BY query_id, rank
     "join on list_id, exact rerank. At scale the labeled corpus persists "
     "partitionBy(list_id) so probes become partition-pruned scans. "
     "Graduated to a FULL DuckDB oracle (r13, VERDICT r12 task 2b): "
-    "portable=True trains with md5-parity seeding + decimal-exact Lloyd "
+    "the trainer uses md5-parity seeding + decimal-exact Lloyd "
     "steps whose centroids round-trip the driver as literals "
     "(_portable_centroid_literals — one scan + a k·dim-group aggregate "
     "per iteration, the corpus never shuffles), and the DuckDB twin "
     "unrolls the identical iterations, so lists, probes, candidates, "
     "and the full top-k hash-match. Recall at this operating point "
-    "keeps its pytest floor vs brute-force cosine; the numpy trainer "
-    "remains the throughput default (portable=False).",
+    "keeps its pytest floor vs brute-force cosine. The persisted index "
+    "(build_ivf_index + ivf_index_topk) returns these exact rows.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, "embeddings", sf_dir)
@@ -1513,7 +1511,6 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=8,
         query_id_col="query_id",
-        portable=True,  # decimal-exact trainer — the DuckDB oracle's twin
     )
 
 
@@ -1529,7 +1526,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "clusters. At warehouse scale the labeled corpus persists "
     "partitionBy(list_id) (build_ivf_index) so this probe is a "
     "partition-pruned scan of 1/16 of the data. Graduated to a FULL "
-    "DuckDB oracle (r13, extending VERDICT r12 task 2b): portable=True "
+    "DuckDB oracle (r13, extending VERDICT r12 task 2b): the "
     "decimal-exact Lloyd trainer over the md5-replayed corpus "
     "(_duck_kmeans_prefix(corpus_cte=duck_clustered_cte)) — lists, "
     "probes, candidates, and the full top-k hash-match. Retrieval "
@@ -1537,7 +1534,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(test_ivf_clustered_portable_recall) vs brute-force cosine.",
 )
 def ann_ivf_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # persist/collect/release: see ann_lsh_topk_clustered — the portable
+    # persist/collect/release: see ann_lsh_topk_clustered — the
     # trainer scans the corpus several times (seeding + 2 Lloyd
     # iterations + labels + rerank) and the md5 corpus expression is the
     # dominant per-scan cost when re-evaluated (r13 measurement).
@@ -1548,7 +1545,6 @@ def ann_ivf_topk_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = similarity.ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=1,
         query_id_col="query_id",
-        portable=True,  # decimal-exact trainer — the DuckDB oracle's twin
     )
     rows = out.collect()
     emb.unpersist()

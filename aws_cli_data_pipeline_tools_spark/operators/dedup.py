@@ -1339,15 +1339,13 @@ def embedding_cosine_pairs(
 
     ``n_planes > 0``: random-hyperplane LSH — bucket by the sign-bit
     signature, pair only within buckets (near-identical vectors collide
-    with high probability), then exact cosine rerank. Hyperplanes come
-    from :func:`similarity._hyperplane_tables` (the ONE seeded-Gaussian
-    definition, same generation order as the former inline copy) and the
-    signature is :func:`similarity._bucketize`'s single numpy matmul per
-    Arrow batch — the r8 review found this path re-implementing both as
-    per-plane interpreted JVM expressions, the exact CodegenFallback
-    shape _bucketize's docstring rejects. ``dim`` (vector length) avoids
-    a driver-side probe of the first row; callers that know the schema
-    should pass it.
+    with high probability), then exact cosine rerank. The planes and
+    buckets are :func:`similarity.lsh_ann_topk`'s: one table of
+    md5-parity planes seeded ``f"lsh-v1|{seed}"``
+    (:func:`similarity.lsh_parity_planes`) and exact integer sign sums
+    (:func:`similarity._bucketize_portable`, one numpy matmul per Arrow
+    batch). ``dim`` (vector length) avoids a driver-side probe of the
+    first row; callers that know the schema should pass it.
 
     NULL embeddings are DROPPED up front (same contract as
     minhash_sides' empty-shingle drop): a NULL vector can never be a
@@ -1362,7 +1360,7 @@ def embedding_cosine_pairs(
         return _cosine_pairs_blocked(
             df, id_col, vec_col, threshold, n_blocks=n_blocks
         )
-    from .similarity import _bucketize, _hyperplane_tables
+    from .similarity import _bucketize_portable, lsh_parity_planes
 
     if dim is None:  # fallback probe — one tiny driver action
         probe = df.select(vec_col).first()
@@ -1373,8 +1371,8 @@ def embedding_cosine_pairs(
                 "empty/all-NULL inputs"
             )
         dim = len(probe[0])
-    planes = _hyperplane_tables(dim, n_planes, n_tables=1, seed=seed)
-    vecs = _bucketize(
+    planes = lsh_parity_planes(dim, n_planes, 1, f"lsh-v1|{seed}")
+    vecs = _bucketize_portable(
         df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
         "id",
         "v",

@@ -16,7 +16,6 @@ query at scale.
 from __future__ import annotations
 
 import math
-import random
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -133,30 +132,17 @@ def cosine_topk(
     return _rank_topk(_partition_topk(scored, k), k)
 
 
-def _hyperplane_tables(
-    dim: int, n_planes: int, n_tables: int, seed: int
-) -> list[list[list[float]]]:
-    """Seeded Gaussian hyperplanes, [table][plane][dim] — deterministic, so
-    plans are reproducible and resumable with no fitted model state."""
-    rnd = random.Random(seed)
-    return [
-        [[rnd.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
-        for _ in range(n_tables)
-    ]
-
-
 def lsh_parity_planes(
     dim: int, n_planes: int, n_tables: int, seed: str = "lsh-v1"
 ) -> list[list[list[int]]]:
     """±1 Rademacher hyperplanes from md5 parity, [table][plane][dim] —
-    the engine-portable twin of :func:`_hyperplane_tables` (VERDICT r11
-    task 4b). Same construction as :func:`_md5_parity_signs` with a
-    per-table seed suffix, so a DuckDB oracle derives the identical sign
-    matrix from the same seed string and replays bucket assignment
-    hash-for-hash. Rademacher signs are a standard random-hyperplane
-    family (sign-LSH needs only a symmetric zero-mean direction
-    distribution), so the recall/candidate-fraction economics track the
-    Gaussian default's curve."""
+    the engine's one LSH plane family. Same construction as
+    :func:`_md5_parity_signs` with a per-table seed suffix, so a DuckDB
+    oracle derives the identical sign matrix from the same seed string
+    and replays bucket assignment hash-for-hash. Rademacher signs are a
+    standard random-hyperplane family (sign-LSH needs only a symmetric
+    zero-mean direction distribution); their measured recall/candidate-
+    fraction curves are in BASELINE.md."""
     return [
         _md5_parity_signs(f"{seed}|t{t}", dim, n_planes)
         for t in range(n_tables)
@@ -174,8 +160,13 @@ def _bucketize_portable(
     batch against the ±1 parity matrix — |sum| ≤ dim·max|v|·1e6, far
     inside int64). Integer sums are order-independent, so the sign bits —
     and therefore every bucket — are bit-identical wherever the same
-    arithmetic is replayed (the DuckDB oracle twin). Same narrow
-    no-shuffle shape as :func:`_bucketize`."""
+    arithmetic is replayed (the DuckDB oracle twin).
+
+    Narrow (mapInPandas, no shuffle): a JVM-expression formulation would
+    inline tables×planes×dim literals into one giant interpreted
+    expression tree — slow to analyze and CodegenFallback to execute.
+    NULL vectors are dropped up front: they can never be neighbors, and
+    one in a batch would turn ``np.stack`` ragged and kill the task."""
     import numpy as np
     import pandas as pd
 
@@ -212,203 +203,6 @@ def _bucketize_portable(
 
     return df.mapInPandas(
         gen, schema=f"{id_name} {id_t}, {vec_name} {vec_t}, table int, bucket bigint"
-    )
-
-
-def _bucketize(
-    df: DataFrame, id_name: str, vec_name: str, planes: list[list[list[float]]]
-) -> DataFrame:
-    """(id, vec) → one row per LSH table: (id, vec, table, bucket).
-
-    Sign-bit signatures via one numpy matmul per Arrow batch (mapInPandas,
-    narrow — no shuffle). A JVM-expression formulation would inline
-    tables×planes×dim literals into one giant interpreted expression tree —
-    slow to analyze and CodegenFallback to execute; the vectorized product
-    is the right physical shape for this math.
-    """
-    import numpy as np
-    import pandas as pd
-
-    p = np.asarray(planes, dtype=np.float64)  # (T, B, dim)
-    n_tables, n_planes, dim = p.shape
-    flat = p.reshape(n_tables * n_planes, dim).T  # (dim, T·B)
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-    id_t = df.schema[id_name].dataType.simpleString()
-    vec_t = df.schema[vec_name].dataType.simpleString()
-    # NULL vectors can never be neighbors; one in a batch turns np.stack
-    # into a ragged object array and the matmul kills the whole task
-    # (r10 review) — drop them here so every _bucketize consumer
-    # (lsh_ann_topk, embedding_cosine_pairs LSH) shares the contract
-    df = df.filter(F.col(vec_name).isNotNull())
-
-    def gen(batches):
-        for batch in batches:
-            if batch.empty:
-                continue
-            mat = np.stack(batch[vec_name].to_numpy()).astype(np.float64)
-            bits = (mat @ flat) >= 0.0  # (n, T·B)
-            bits = bits.reshape(len(batch), n_tables, n_planes)
-            buckets = bits @ weights  # (n, T) integer bucket ids
-            frames = [
-                pd.DataFrame(
-                    {
-                        id_name: batch[id_name],
-                        vec_name: batch[vec_name],
-                        "table": t,
-                        "bucket": buckets[:, t],
-                    }
-                )
-                for t in range(n_tables)
-            ]
-            yield pd.concat(frames)
-
-    return df.mapInPandas(
-        gen, schema=f"{id_name} {id_t}, {vec_name} {vec_t}, table int, bucket bigint"
-    )
-
-
-def _ivf_centroids(
-    corpus: DataFrame,
-    id_name: str,
-    vec_name: str,
-    n_centroids: int,
-    refine_iters: int,
-    seed: int,
-):
-    """Train IVF centroids: deterministic seeding + distributed Lloyd steps.
-
-    Seeding: the ``n_centroids`` corpus vectors with the smallest
-    ``xxhash64(id, seed)`` — a uniform, reproducible sample that needs one
-    ``TakeOrderedAndProject`` job and collects only the centroids (the
-    model is O(centroids·dim) floats — legitimately driver-sized, like the
-    LSH hyperplanes).
-
-    Each Lloyd iteration is map-side: every Arrow batch computes, per
-    centroid, the (count, sum-vector) of its assigned rows — so the shuffle
-    is ``partitions × centroids`` tiny partial rows, never the corpus — and
-    the per-centroid partials are merged with one small grouped-map. Empty
-    clusters keep their previous centroid.
-
-    Returns a (n_centroids, dim) float64 numpy array with L2-normalized
-    rows (cosine assignment ≡ dot product with normalized centroids).
-    """
-    import numpy as np
-    import pandas as pd
-
-    # same NULL-vector drop contract as _bucketize/_ivf_assign: a NULL
-    # embedding in any Arrow batch crashed the Lloyd partials' np.stack
-    # (r10 review); it carries no geometry to train on
-    corpus = corpus.filter(F.col(vec_name).isNotNull())
-    seeds = (
-        corpus.select(vec_name)
-        .orderBy(F.xxhash64(F.col(id_name), F.lit(seed)))
-        .limit(n_centroids)
-        .collect()
-    )
-    if not seeds:
-        # explicit contract error, matching lsh_ann_topk's empty-corpus
-        # guard — np.stack([]) would otherwise raise an opaque "need at
-        # least one array to stack" (r9 review)
-        raise ValueError("corpus is empty: cannot seed k-means centroids")
-    cents = np.stack([np.asarray(r[0], dtype=np.float64) for r in seeds])
-
-    def normalize(m):
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0.0] = 1.0
-        return m / n
-
-    cents = normalize(cents)
-    partial_schema = "list_id int, cnt bigint, vsum array<double>"
-
-    for _ in range(refine_iters):
-        cn = cents  # bind current iteration's centroids into the closure
-
-        def partials(batches):
-            for batch in batches:
-                if batch.empty:
-                    continue
-                mat = np.stack(batch[vec_name].to_numpy()).astype(np.float64)
-                assign = np.argmax(normalize(mat) @ cn.T, axis=1)
-                rows = []
-                for lid in np.unique(assign):
-                    sub = mat[assign == lid]
-                    rows.append((int(lid), len(sub), sub.sum(axis=0).tolist()))
-                yield pd.DataFrame(rows, columns=["list_id", "cnt", "vsum"])
-
-        def merge(pdf):
-            vs = np.stack(pdf["vsum"].to_numpy()).sum(axis=0)
-            return pd.DataFrame(
-                {
-                    "list_id": [int(pdf["list_id"].iloc[0])],
-                    "cnt": [int(pdf["cnt"].sum())],
-                    "vsum": [vs.tolist()],
-                }
-            )
-
-        merged = (
-            corpus.select(vec_name)
-            .mapInPandas(partials, schema=partial_schema)
-            .groupBy("list_id")
-            .applyInPandas(merge, schema=partial_schema)
-            .collect()
-        )
-        nxt = cents.copy()  # empty clusters keep their previous centroid
-        for r in merged:
-            if r["cnt"] > 0:
-                nxt[r["list_id"]] = np.asarray(r["vsum"]) / r["cnt"]
-        cents = normalize(nxt)
-    return cents
-
-
-def _ivf_assign(
-    df: DataFrame, id_name: str, vec_name: str, cents, n_probe: int = 1
-) -> DataFrame:
-    """(id, vec) → (id, vec, list_id) × n_probe nearest centroids.
-
-    Narrow mapInPandas (no shuffle): one numpy matmul per Arrow batch
-    against the broadcast-by-closure centroid matrix. n_probe=1 labels a
-    corpus; n_probe>1 expands queries to their probe lists.
-    """
-    import numpy as np
-    import pandas as pd
-
-    id_t = df.schema[id_name].dataType.simpleString()
-    vec_t = df.schema[vec_name].dataType.simpleString()
-    # NULL vectors: same drop contract as _bucketize (np.stack would
-    # turn ragged and crash the task — r10 review)
-    df = df.filter(F.col(vec_name).isNotNull())
-
-    def gen(batches):
-        for batch in batches:
-            if batch.empty:
-                continue
-            mat = np.stack(batch[vec_name].to_numpy()).astype(np.float64)
-            nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-            nrm[nrm == 0.0] = 1.0
-            sims = (mat / nrm) @ cents.T  # (n, C)
-            if n_probe == 1:
-                yield pd.DataFrame(
-                    {
-                        id_name: batch[id_name],
-                        vec_name: batch[vec_name],
-                        "list_id": np.argmax(sims, axis=1).astype(np.int32),
-                    }
-                )
-            else:
-                top = np.argsort(-sims, axis=1)[:, :n_probe]  # (n, probe)
-                yield pd.concat(
-                    pd.DataFrame(
-                        {
-                            id_name: batch[id_name],
-                            vec_name: batch[vec_name],
-                            "list_id": top[:, j].astype(np.int32),
-                        }
-                    )
-                    for j in range(top.shape[1])
-                )
-
-    return df.mapInPandas(
-        gen, schema=f"{id_name} {id_t}, {vec_name} {vec_t}, list_id int"
     )
 
 
@@ -451,9 +245,8 @@ def _portable_dot_literal(vec, cvec: list[float]):
     addition at (38,10) is EXACT at embedding magnitudes, so the
     left-to-right fold equals the oracle's order-free group sum bit for
     bit. Runs per-row in the scan (no explode, no join, no shuffle):
-    the portable trainer's whole point vs the long-form
-    kmeans_clusters_portable shape, which pays an n×dim×k join-aggregate
-    per iteration.
+    the trainer's whole point vs the pre-r13 long-form k-means shape,
+    which paid an n×dim×k join-aggregate per iteration.
 
     Precision note: the fold runs at DECIMAL(28,10), NOT (38,10) —
     Spark's decimal ADD rule is (p,s)+(p,s) → (p+1, s) capped at 38,
@@ -479,9 +272,10 @@ def _portable_dot_literal(vec, cvec: list[float]):
 
 
 def _qname(name: str) -> str:
-    """Backtick-quoted column reference for textual SQL (dots legal in
-    column names — the profiler's ``_qcol`` discipline)."""
-    return "`" + name.replace("`", "``") + "`"
+    """Column reference for textual SQL that resolves like ``F.col(name)``:
+    a dotted name is a nested field path (``meta.embedding``), and each
+    segment is backtick-quoted so any other character stays literal."""
+    return ".".join("`" + p.replace("`", "``") + "`" for p in name.split("."))
 
 
 def _ranked_lists_sql(vec_sql: str, cents: list[list[float]]) -> str:
@@ -522,8 +316,9 @@ def _portable_ranked_lists(vec_col: str, cents: list[list[float]]):
     element 1 is the argmax assignment (ties → smallest list_id, the
     DuckDB twin's ``ORDER BY dot DESC, list_id``), a slice of the first
     n_probe is the probe set. ``vec_col`` is the COLUMN NAME of the
-    vector (r14: the whole expression is one textual SQL parse, so the
-    reference must be a name, not a Column).
+    vector, dotted for a nested field as with ``F.col`` (r14: the whole
+    expression is one textual SQL parse, so the reference must be a
+    name, not a Column).
 
     Built as ONE transform over a nested centroid-matrix literal, not k
     separate ``_portable_dot_literal`` trees: the k-tree form carried
@@ -608,11 +403,11 @@ def _portable_centroid_literals(
     n_centroids: int,
     refine_iters: int,
 ) -> list[list[float]]:
-    """Engine-portable IVF/k-means trainer returning the centroids as
-    driver-side floats (O(k·dim) model state, the same posture as
-    :func:`_ivf_centroids`'s numpy path) — semantics identical to
-    :func:`kmeans_clusters_portable`'s loop, replayed step-for-step by
-    the DuckDB Lloyd unroll (catalog ``_duck_kmeans_iter``):
+    """The engine's one IVF/k-means trainer, returning the centroids as
+    driver-side floats (O(k·dim) model state, like the LSH planes) —
+    shared by :func:`ivf_topk`, :func:`build_ivf_index` and
+    :func:`kmeans_clusters`, and replayed step-for-step by the DuckDB
+    Lloyd unroll (catalog ``_duck_kmeans_iter``):
 
     - seeding: the ``n_centroids`` rows with the smallest
       ``(portable_hash64(id), id)``; list_id = that order's 0-based rank;
@@ -696,7 +491,8 @@ def _portable_centroid_literals(
         .collect()
     )
     if not seed_rows:
-        # same explicit contract as _ivf_centroids' empty-corpus guard
+        # name the problem instead of failing on an empty centroid
+        # literal deep inside the first iteration's SQL parse
         raise ValueError("corpus is empty: cannot seed k-means centroids")
 
     def _divide(mat: list[list[float]], norms: list[float]) -> list[list[float]]:
@@ -716,8 +512,8 @@ def _portable_centroid_literals(
     )
     src_wide = _fan_out(src)
     for _ in range(refine_iters):
-        # slice/struct-lambda co-resolution: keep the generator in its own
-        # select (see the FIELD_NOT_FOUND note at the ivf_topk probe site)
+        # the posexplode generator stays in its own select (see the
+        # FIELD_NOT_FOUND note on _ivf_probes)
         assigned = src_wide.select(
             F.col(vec_col).alias("__v"),
             F.element_at(_portable_ranked_lists(vec_col, cents), 1)[
@@ -745,118 +541,53 @@ def _portable_centroid_literals(
     return cents
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    refine_iters: int = 2,
-    seed: int = 11,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    portable: bool = False,
-) -> DataFrame:
-    """Approximate NN via an IVF (inverted-file) partition of the corpus.
-
-    Train ``n_centroids`` cosine centroids (deterministic seed + Lloyd
-    steps, see ``_ivf_centroids``), label each corpus vector with its
-    nearest centroid (narrow), expand each query to its ``n_probe``
-    nearest lists, equi-join query probes to corpus labels on ``list_id``,
-    exact-rerank candidates by cosine, two-phase top-k.
-
-    Scale posture vs LSH: same candidate-join shape, but the partition is
-    data-adaptive (centroids follow density) so probe lists capture near
-    neighbors with far fewer candidates per query on clustered corpora.
-    At warehouse scale the labeled corpus IS the index — write it
-    ``partitionBy("list_id")`` once and every probe join becomes a
-    partition-pruned scan of n_probe/n_centroids of the data; this
-    function recomputes labels inline because the bench corpus is read
-    fresh each call. Cluster-size skew (a hot list) is bounded by
-    n_centroids sizing; AQE skew-join handles the residual.
-
-    ``portable=True`` (VERDICT r12 task 2b) swaps the numpy trainer for
-    :func:`_portable_centroid_literals` (md5-parity seeding + decimal-
-    exact Lloyd steps) and assigns labels/probes with decimal-exact
-    literal-centroid dots — making the trained lists, the candidate set,
-    the rerank, and the full top-k replayable hash-for-hash by a DuckDB
-    oracle (the catalog's unrolled-Lloyd twin). Same plan shape: the
-    corpus still never shuffles (assignment is per-row in the scan,
-    probes broadcast); the decimal folds cost more per row than the
-    Arrow matmul, so the default stays the throughput path.
-    """
-    if portable:
-        cents_lit = _portable_centroid_literals(
-            corpus, id_col, vec_col, n_centroids, refine_iters
-        )
-        c = corpus.filter(F.col(vec_col).isNotNull()).select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-        )
-        q = queries.filter(F.col(vec_col).isNotNull()).select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-        )
-        labeled = _fan_out(c).withColumn(
-            "list_id",
-            F.element_at(_portable_ranked_lists("cv", cents_lit), 1)[
-                "list_id"
-            ],
-        )
-        # slice first, explode in a separate select: the generator and
-        # the struct-building lambda must not co-resolve (see the
-        # FIELD_NOT_FOUND note in _portable_centroid_literals)
-        probes = (
-            q.select(
-                "query_id",
-                "qv",
-                F.slice(
-                    _portable_ranked_lists("qv", cents_lit),
-                    1,
-                    n_probe,
-                ).alias("__pr"),
-            )
-            .select("query_id", "qv", F.explode("__pr").alias("__p"))
-            .select(
-                "query_id", "qv", F.col("__p")["list_id"].alias("__plist")
-            )
-        )
-        # Null-safe join key + explicit not-null filter on the TINY side
-        # (r13 optimization round): a plain equi-join makes
-        # InferFiltersFromConstraints derive isnotnull(list_id) for BOTH
-        # sides and push it below the exchange, re-evaluating the whole
-        # per-row decimal argmax in a single-task pre-shuffle Filter
-        # (measured 2.3 s of the rerank's 2.8 s at sf0.1). `<=>` implies
-        # no not-null constraints, and filtering null probes on the
-        # broadcast side (a few rows — the re-evaluation is free there)
-        # makes the result identical to the equi-join for every input:
-        # with no null probe keys, corpus rows with a null list_id can
-        # match nothing under either join.
-        cand = (
-            F.broadcast(probes.filter(F.col("__plist").isNotNull()))
-            .join(labeled, F.col("__plist").eqNullSafe(F.col("list_id")))
-            .select("query_id", "neighbor_id", "qv", "cv")
-        )
-        scored = cand.select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_similarity(F.col("qv"), F.col("cv")), 6
-            ).alias("cosine"),
-        )
-        return _rank_topk(_partition_topk(scored, k), k)
-
-    cents = _ivf_centroids(
-        corpus, id_col, vec_col, n_centroids, refine_iters, seed
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(
+def _query_frame(queries: DataFrame, query_id_col: str, vec_col: str) -> DataFrame:
+    """(query_id, qv) over the non-NULL query vectors."""
+    return queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    labeled = _ivf_assign(c, "neighbor_id", "cv", cents, n_probe=1)
-    probes = _ivf_assign(q, "query_id", "qv", cents, n_probe=n_probe)
 
-    cand = F.broadcast(probes).join(labeled, "list_id").select(
-        "query_id", "neighbor_id", "qv", "cv"
+
+def _ivf_probes(q: DataFrame, cents: list[list[float]], n_probe: int) -> DataFrame:
+    """(query_id, qv) → (query_id, qv, __plist), one row per probed list:
+    the ``n_probe`` nearest centroids by decimal-exact dot, ties to the
+    smaller list id (the DuckDB twin's ``rn <= n_probe``).
+
+    Slice first, explode in a separate select: a generator and the
+    struct-building lambda of :func:`_portable_ranked_lists` resolved in
+    one select fail analysis with FIELD_NOT_FOUND."""
+    return (
+        q.select(
+            "query_id",
+            "qv",
+            F.slice(_portable_ranked_lists("qv", cents), 1, n_probe).alias(
+                "__pr"
+            ),
+        )
+        .select("query_id", "qv", F.explode("__pr").alias("__p"))
+        .select("query_id", "qv", F.col("__p")["list_id"].alias("__plist"))
+    )
+
+
+def _ivf_rerank(probes: DataFrame, labeled: DataFrame, k: int) -> DataFrame:
+    """Candidates = probes ⋈ labeled corpus rows (neighbor_id, cv,
+    list_id) on the list id; exact cosine rerank, two-phase top-k.
+
+    Null-safe join key + explicit not-null filter on the TINY side
+    (r13 optimization round): a plain equi-join makes
+    InferFiltersFromConstraints derive isnotnull(list_id) for BOTH
+    sides and push it below the exchange, re-evaluating the whole
+    per-row decimal argmax in a single-task pre-shuffle Filter
+    (measured 2.3 s of the rerank's 2.8 s at sf0.1). `<=>` implies no
+    not-null constraints, and filtering null probes on the broadcast
+    side (a few rows — the re-evaluation is free there) makes the
+    result identical to the equi-join for every input: with no null
+    probe keys, corpus rows with a null list_id can match nothing under
+    either join."""
+    cand = (
+        F.broadcast(probes.filter(F.col("__plist").isNotNull()))
+        .join(labeled, F.col("__plist").eqNullSafe(F.col("list_id")))
+        .select("query_id", "neighbor_id", "qv", "cv")
     )
     scored = cand.select(
         "query_id",
@@ -866,31 +597,83 @@ def ivf_topk(
     return _rank_topk(_partition_topk(scored, k), k)
 
 
+def ivf_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    n_centroids: int = 16,
+    n_probe: int = 4,
+    refine_iters: int = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "query_id",
+) -> DataFrame:
+    """Approximate NN via an IVF (inverted-file) partition of the corpus.
+
+    Train ``n_centroids`` cosine centroids with
+    :func:`_portable_centroid_literals` (md5-parity seeding + decimal-
+    exact Lloyd steps), label each corpus vector with its nearest
+    centroid, expand each query to its ``n_probe`` nearest lists,
+    join query probes to corpus labels on the list id, exact-rerank
+    candidates by cosine, two-phase top-k. Every step is deterministic
+    decimal or integer arithmetic, so the lists, the candidate set and
+    the full top-k are replayed hash-for-hash by the catalog's DuckDB
+    oracle (``ann_ivf_topk``). NULL vectors are dropped on both sides.
+
+    Scale posture vs LSH: same candidate-join shape, but the partition is
+    data-adaptive (centroids follow density) so probe lists capture near
+    neighbors with far fewer candidates per query on clustered corpora.
+    Assignment is a per-row expression in the scan and probes broadcast,
+    so the corpus never shuffles. At warehouse scale the labeled corpus
+    IS the index — :func:`build_ivf_index` writes it
+    ``partitionBy("list_id")`` once and :func:`ivf_index_topk` turns
+    every probe join into a partition-pruned scan of n_probe/n_centroids
+    of the data, with the same results as this function. Cluster-size
+    skew (a hot list) is bounded by n_centroids sizing; AQE skew-join
+    handles the residual.
+    """
+    cents = _portable_centroid_literals(
+        corpus, id_col, vec_col, n_centroids, refine_iters
+    )
+    c = corpus.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
+    )
+    labeled = _fan_out(c).withColumn(
+        "list_id",
+        F.element_at(_portable_ranked_lists("cv", cents), 1)["list_id"],
+    )
+    probes = _ivf_probes(_query_frame(queries, query_id_col, vec_col), cents, n_probe)
+    return _ivf_rerank(probes, labeled, k)
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
     n_centroids: int = 16,
     refine_iters: int = 2,
-    seed: int = 11,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> None:
     """Persist an IVF index: the labeled corpus written
     ``partitionBy(list_id)`` plus the centroid matrix as a tiny parquet.
 
-    The partitioned layout is the point — a probe of n_probe lists becomes
+    Same trainer and labels as :func:`ivf_topk`, so
+    :func:`ivf_index_topk` over this index returns exactly ``ivf_topk``'s
+    rows for the same parameters. NULL vectors are not indexed. The
+    partitioned layout is the point — a probe of n_probe lists becomes
     a partition-pruned scan reading n_probe/n_centroids of the corpus
     (PartitionFilters in the plan), which is what makes IVF pay at 100 TB:
     index once, then every query touches only its probed fraction.
     """
-    import pandas as pd
-
     spark = corpus.sparkSession
-    cents = _ivf_centroids(
-        corpus, id_col, vec_col, n_centroids, refine_iters, seed
+    cents = _portable_centroid_literals(
+        corpus, id_col, vec_col, n_centroids, refine_iters
     )
-    labeled = _ivf_assign(
-        corpus.select(F.col(id_col), F.col(vec_col)), id_col, vec_col, cents
+    labeled = _fan_out(corpus.filter(F.col(vec_col).isNotNull())).select(
+        F.col(id_col),
+        F.col(vec_col),
+        F.element_at(_portable_ranked_lists(vec_col, cents), 1)["list_id"]
+        .alias("list_id"),
     )
     # cluster by the write-partition key before partitionBy (guide §6):
     # with a multi-partition input every task would otherwise open a file
@@ -900,12 +683,9 @@ def build_ivf_index(
     labeled.repartition("list_id").write.mode("overwrite").partitionBy(
         "list_id"
     ).parquet(f"{path}/corpus")
-    cpdf = pd.DataFrame(
-        {"list_id": range(len(cents)), "centroid": [c.tolist() for c in cents]}
-    )
-    spark.createDataFrame(cpdf).coalesce(1).write.mode("overwrite").parquet(
-        f"{path}/centroids"
-    )
+    spark.createDataFrame(
+        list(enumerate(cents)), "list_id int, centroid array<double>"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
 
 
 def ivf_index_topk(
@@ -922,50 +702,33 @@ def ivf_index_topk(
     to probe lists, scan ONLY those ``list_id=`` partitions of the indexed
     corpus (``isin`` filter on the partition column → partition pruning),
     exact-rerank, two-phase top-k. Same results as ``ivf_topk`` with the
-    same centroids; the corpus scan cost drops to n_probe/n_centroids.
+    same parameters; the corpus scan cost drops to n_probe/n_centroids.
     """
-    import numpy as np
-
     rows = spark.read.parquet(f"{path}/centroids").collect()
     if not rows:
         raise ValueError(
             f"ivf_index_topk: no centroids under {path}/centroids — run "
             "build_ivf_index first (empty or corrupt index)"
         )
-    cents = np.zeros((len(rows), len(rows[0]["centroid"])))
-    for r in rows:
-        cents[r["list_id"]] = r["centroid"]
-
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
+    cents = [list(r["centroid"]) for r in sorted(rows, key=lambda r: r["list_id"])]
     # collect the (small, broadcastable-by-contract) probe assignments
-    # ONCE and rebind as a local relation: the lazy plan used to execute
-    # the assignment mapInPandas twice — once for the distinct list-id
-    # pull, again inside the broadcast join (r8 review)
-    probes_local = _ivf_assign(
-        q, "query_id", "qv", cents, n_probe=n_probe
+    # ONCE and rebind as a local relation: the lazy plan would evaluate
+    # the probe expansion twice — once for the list-id pull, again
+    # inside the broadcast join (r8 review)
+    probes_plan = _ivf_probes(
+        _query_frame(queries, query_id_col, vec_col), cents, n_probe
     )
-    probe_rows = probes_local.collect()
-    probes = spark.createDataFrame(probe_rows, probes_local.schema)
-    probe_lists = sorted({r["list_id"] for r in probe_rows})
-    labeled = spark.read.parquet(f"{path}/corpus").filter(
-        F.col("list_id").isin(probe_lists)  # partition-pruned scan
+    probe_rows = probes_plan.collect()
+    probes = spark.createDataFrame(probe_rows, probes_plan.schema)
+    probe_lists = sorted({r["__plist"] for r in probe_rows})
+    c = (
+        spark.read.parquet(f"{path}/corpus")
+        .filter(F.col("list_id").isin(probe_lists))  # partition-pruned scan
+        .select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "list_id"
+        )
     )
-    c = labeled.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        "list_id",
-    )
-    cand = F.broadcast(probes).join(c, "list_id").select(
-        "query_id", "neighbor_id", "qv", "cv"
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine_similarity(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    return _rank_topk(_partition_topk(scored, k), k)
+    return _ivf_rerank(probes, c, k)
 
 
 def lsh_ann_topk(
@@ -979,7 +742,6 @@ def lsh_ann_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     dim: int | None = None,
-    portable: bool = False,
 ) -> DataFrame:
     """Approximate NN: multi-table random-hyperplane LSH.
 
@@ -991,16 +753,15 @@ def lsh_ann_topk(
     cluster the bucket join shuffles only candidate rows, never the vectors
     of non-candidates.
 
+    The planes are md5-parity ±1 Rademacher planes seeded by
+    ``f"lsh-v1|{seed}"`` (:func:`lsh_parity_planes`), and buckets are
+    exact integer micro-unit sign sums (:func:`_bucketize_portable`), so
+    every bucket — and therefore the full candidate set, rerank and
+    top-k — is replayed hash-for-hash by the catalog's DuckDB oracle
+    (``ann_lsh_topk``). NULL vectors are dropped on both sides.
+
     ``dim`` avoids a driver-side first-row probe; pass it when the vector
     length is known (it is part of the data contract).
-
-    ``portable=True`` swaps the Gaussian hyperplanes for md5-parity ±1
-    Rademacher planes with exact integer-micro-unit sign sums
-    (:func:`lsh_parity_planes` / :func:`_bucketize_portable`), making
-    every bucket — and therefore the full candidate set, rerank, and
-    top-k — replayable hash-for-hash by a DuckDB oracle (VERDICT r11
-    task 4b). Same plan shape and same recall family; the quantization
-    adds one narrow array transform per side.
     """
     if dim is None:  # fallback probe — one tiny driver action
         first = corpus.select(vec_col).first()
@@ -1015,20 +776,15 @@ def lsh_ann_topk(
     q = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    if portable:
-        planes = lsh_parity_planes(dim, n_planes, n_tables, f"lsh-v1|{seed}")
-        c_b = _bucketize_portable(_fan_out(c), "neighbor_id", "cv", planes)
-        q_b = _bucketize_portable(q, "query_id", "qv", planes)
-    else:
-        planes = _hyperplane_tables(dim, n_planes, n_tables, seed)
-        c_b = _bucketize(c, "neighbor_id", "cv", planes)
-        q_b = _bucketize(q, "query_id", "qv", planes)
+    planes = lsh_parity_planes(dim, n_planes, n_tables, f"lsh-v1|{seed}")
+    c_b = _bucketize_portable(_fan_out(c), "neighbor_id", "cv", planes)
+    q_b = _bucketize_portable(q, "query_id", "qv", planes)
 
     # Null-safe join keys + not-null filter on the TINY side: the plain
     # equi-join made InferFiltersFromConstraints re-evaluate the whole
     # per-row bucket expression in a derived isnotnull Filter below the
-    # corpus-side exchange (see the ivf_topk probe join note — same
-    # pathology, measured there). Dropping null-keyed query rows keeps
+    # corpus-side exchange (see :func:`_ivf_rerank` — same pathology,
+    # measured there). Dropping null-keyed query rows keeps
     # the result identical to the equi-join for every input.
     q_nn = q_b.filter(
         F.col("table").isNotNull() & F.col("bucket").isNotNull()
@@ -1136,7 +892,6 @@ def kmeans_clusters(
     corpus: DataFrame,
     n_centroids: int = 16,
     refine_iters: int = 2,
-    seed: int = 11,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -1144,43 +899,10 @@ def kmeans_clusters(
     trainer exposed as a first-class clustering op (cluster labels drive
     diversity sampling, topic balance, and per-cluster quotas in a
     training-data pipeline; the same labels ARE the IVF index lists).
-
-    Returns (id, list_id, cos_to_centroid). Same scale shape as IVF:
-    centroids are O(k·dim) driver-side model state, assignment is one
-    narrow matmul pass, and the per-cluster cosine comes from a broadcast
-    join with the tiny centroid table — the corpus never shuffles.
-    """
-    cents = _ivf_centroids(corpus, id_col, vec_col, n_centroids, refine_iters, seed)
-    assigned = _ivf_assign(
-        corpus.select(id_col, vec_col), id_col, vec_col, cents, n_probe=1
-    )
-    spark = corpus.sparkSession
-    cent_rows = [(i, [float(x) for x in c]) for i, c in enumerate(cents)]
-    cent_df = spark.createDataFrame(
-        cent_rows, "list_id int, centroid array<double>"
-    )
-    return assigned.join(F.broadcast(cent_df), "list_id").select(
-        F.col(id_col),
-        "list_id",
-        F.round(
-            cosine_similarity(F.col(vec_col).cast("array<double>"), F.col("centroid")),
-            6,
-        ).alias("cos_to_centroid"),
-    )
-
-
-def kmeans_clusters_portable(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    refine_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Engine-portable spherical k-means — same semantics as
-    :func:`kmeans_clusters` (seeded init, Lloyd refinement, returns
-    (id, list_id, cos_to_centroid)) but every arithmetic step follows
-    the repo's cross-engine determinism discipline, so a DuckDB oracle
-    replays labels AND cosines exactly (VERDICT r11 task 4a).
+    Returns (id, list_id, cos_to_centroid) for every non-NULL vector.
+    Every arithmetic step follows the repo's cross-engine determinism
+    discipline, so a DuckDB oracle replays labels AND cosines exactly
+    (VERDICT r11 task 4a).
 
     Raises ``ValueError`` on an empty or all-null-vector corpus (since
     r13: the trainer needs at least one seed vector; earlier rounds
@@ -1383,9 +1105,9 @@ def random_projection(
     a perfect square of a power of two, the scale factor is irrational
     and the final multiply falls back to double.) At production scale
     you would materialize the tiny ±1 matrix once (seed-derived,
-    out_dim×in_dim entries) and do a numpy matmul per Arrow batch like
-    ``_bucketize``; this expression form trades that for exact
-    cross-engine replay — both derive identical signs from the seed.
+    out_dim×in_dim entries) and do an integer numpy matmul per Arrow
+    batch like ``_bucketize_portable``; both derive identical signs
+    from the seed.
     """
     if dim is not None:
         # fast path: known input width → plan-time literal sign matrix;

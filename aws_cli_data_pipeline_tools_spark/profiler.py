@@ -143,17 +143,13 @@ def _narrow_scan(df: DataFrame) -> bool:
     the cluster: plan-size estimate < maxPartitionBytes ×
     defaultParallelism. Driver-side plan inspection only; unknown
     estimates count as NOT narrow (keep the fewer-passes shape)."""
-    from .sources import plan_size_bytes
+    from .sources import max_partition_bytes, plan_size_bytes
 
     est = plan_size_bytes(df)
     if est is None:
         return False
     spark = df.sparkSession
-    try:
-        mpb = int(spark.conf.get("spark.sql.files.maxPartitionBytes").rstrip("b"))
-    except (TypeError, ValueError, AttributeError):
-        mpb = 128 * 1024 * 1024
-    return est < mpb * spark.sparkContext.defaultParallelism
+    return est < max_partition_bytes(spark) * spark.sparkContext.defaultParallelism
 
 
 def _agg_row(

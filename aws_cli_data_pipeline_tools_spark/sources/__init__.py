@@ -96,9 +96,10 @@ def scratch_dir(prefix: str) -> str:
 _FANOUT_ENV = "SPARK_GRAFT_SCAN_FANOUT"
 _FANOUT_ENV_LEGACY = "SPARKGRAFT_SCAN_FANOUT"
 
-#: Memo of static partition counts keyed by (SparkContext identity,
-#: analyzed-plan semanticHash) — see ``scan_parallelism``.
-_WIDTH_CACHE: dict[tuple[int, int], int] = {}
+#: Memo of static partition counts keyed by (application id, resolved
+#: maxPartitionBytes, resolved shuffle partitions, analyzed-plan
+#: semanticHash) — see ``scan_parallelism``.
+_WIDTH_CACHE: dict[tuple[str, int, int, int], int] = {}
 _WIDTH_CACHE_MAX = 4096
 
 
@@ -130,6 +131,18 @@ def _fanout_target(df: DataFrame) -> int | None:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
+def _sql_conf(spark: SparkSession):
+    """The session's JVM ``SQLConf``: its typed getters return values as
+    Spark resolves them (size suffixes such as ``64m`` parsed, defaults
+    and derived settings applied)."""
+    return spark._jsparkSession.sessionState().conf()
+
+
+def max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes, as Spark reads it."""
+    return int(_sql_conf(spark).filesMaxPartitionBytes())
+
+
 def scan_parallelism(df: DataFrame) -> int:
     """The frame's STATIC partition count, memoized by analyzed-plan
     ``semanticHash`` (r14, ADVICE r13): ``df.rdd.getNumPartitions()``
@@ -146,10 +159,20 @@ def scan_parallelism(df: DataFrame) -> int:
     at runtime, so width decisions are only meaningful for scan-level
     frames (the only places the operators call this). A hash collision
     can at worst mis-size a repartition width — never affects results.
+
+    The key also holds the application id (never reused, unlike
+    ``id()`` of a collected context) and the resolved
+    ``maxPartitionBytes`` and shuffle-partition confs, so changing
+    either mid-session gives a new key, not a stale width.
     """
-    sc_key = id(df.sparkSession.sparkContext)
+    spark = df.sparkSession
     try:
-        key = (sc_key, df.semanticHash())
+        key = (
+            spark.sparkContext.applicationId,
+            max_partition_bytes(spark),
+            int(_sql_conf(spark).numShufflePartitions()),
+            df.semanticHash(),
+        )
     except Exception:
         key = None
     if key is not None and key in _WIDTH_CACHE:

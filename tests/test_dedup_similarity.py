@@ -254,33 +254,23 @@ def test_lsh_ann_recall(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     exact = similarity.cosine_topk(emb, q, k=10)
-    # the registered operating point (BASELINE.md recall curve): fixture
-    # embeddings are near-random (true neighbors at cosine ~0.28, i.e.
-    # ~74 deg), where 5 planes x 16 tables measures recall@10 = 0.77 at
-    # ~0.4 candidate fraction. Real corpora with actual near-dups sit far
-    # right of this curve at far lower cost.
-    approx = similarity.lsh_ann_topk(emb, q, k=10, n_planes=5, n_tables=16)
+    # the registered ann_lsh_topk operating point (BASELINE.md recall
+    # curve): fixture embeddings are near-random (true neighbors at
+    # cosine ~0.28, i.e. ~74 deg), where 5 planes x 16 tables measures
+    # recall@10 = 0.76 at ~0.4 candidate fraction with the md5-parity
+    # planes. Real corpora with actual near-dups sit far right of this
+    # curve at far lower cost. The DuckDB oracle of ann_lsh_topk verifies
+    # replay fidelity, not retrieval quality, so a seed/bucket change
+    # that cratered recall would still hash-match — this floor owns it.
     e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
-    a = {(r.query_id, r.neighbor_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.7
-    # self-match must always be found (identical vector → same buckets)
-    assert all((qid, qid) in a for qid in range(10))
-
-    # the SHIPPED portable operating point needs its own machine-checked
-    # recall floor (r12 review): the registered ann_lsh_topk entry now
-    # runs portable=True and its DuckDB oracle replays the same parity
-    # planes — it verifies replay fidelity, not retrieval quality, so a
-    # seed/bucket change that cratered recall would still hash-match.
-    # Measured with the md5-parity Rademacher planes: recall@10 = 0.76
-    # at 5×16, same curve as the Gaussian construction.
     ap = {
         (r.query_id, r.neighbor_id)
         for r in similarity.lsh_ann_topk(
-            emb, q, k=10, n_planes=5, n_tables=16, dim=64, portable=True
+            emb, q, k=10, n_planes=5, n_tables=16, dim=64
         ).collect()
     }
     assert len(e & ap) / len(e) >= 0.7
+    # self-match must always be found (identical vector → same buckets)
     assert all((qid, qid) in ap for qid in range(10))
 
 
@@ -426,13 +416,13 @@ def test_kmeans_clusters_portable_matches_semantics(spark, sf_dir):
     exact DuckDB parity is covered by the embedding_cluster_profile
     oracle."""
     from aws_cli_data_pipeline_tools_spark.operators.similarity import (
-        kmeans_clusters_portable,
+        kmeans_clusters,
     )
     from aws_cli_data_pipeline_tools_spark.sources import load_table
 
     emb = load_table(spark, "embeddings", sf_dir)
-    out1 = kmeans_clusters_portable(emb, n_centroids=8)
-    out2 = kmeans_clusters_portable(emb, n_centroids=8)
+    out1 = kmeans_clusters(emb, n_centroids=8)
+    out2 = kmeans_clusters(emb, n_centroids=8)
     a = out1.collect()
     b = out2.collect()
     # corpus-sized exploded cache must be releasable by the caller
@@ -453,8 +443,8 @@ def test_kmeans_clusters_portable_matches_semantics(spark, sf_dir):
 
 
 def test_lsh_ann_topk_portable_contract(spark, sf_dir):
-    """portable=True (md5-parity planes, integer sign sums — VERDICT r11
-    task 4b) must keep the LSH contract: deterministic output, self-match
+    """The md5-parity planes with integer sign sums (VERDICT r11 task 4b)
+    must keep the LSH contract: deterministic output, self-match
     always retrieved, ranks dense from 1; exact DuckDB parity is covered
     by the ann_lsh_topk oracle."""
     from aws_cli_data_pipeline_tools_spark.operators.similarity import (
@@ -468,11 +458,11 @@ def test_lsh_ann_topk_portable_contract(spark, sf_dir):
     )
     out = lsh_ann_topk(
         emb, queries, k=5, n_planes=5, n_tables=16,
-        query_id_col="query_id", dim=64, portable=True,
+        query_id_col="query_id", dim=64,
     ).collect()
     again = lsh_ann_topk(
         emb, queries, k=5, n_planes=5, n_tables=16,
-        query_id_col="query_id", dim=64, portable=True,
+        query_id_col="query_id", dim=64,
     ).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
     by_q = {}
@@ -487,8 +477,8 @@ def test_lsh_ann_topk_portable_contract(spark, sf_dir):
 
 
 def test_ivf_topk_portable_contract_and_recall(spark, sf_dir):
-    """ivf_topk(portable=True) (r13, VERDICT r12 task 2b — the exact-
-    oracle construction behind the graduated ann_ivf_topk): must be
+    """ivf_topk (r13, VERDICT r12 task 2b — the exact-oracle
+    construction behind the graduated ann_ivf_topk): must be
     deterministic, retrieve every self-match at rank 1 with dense ranks,
     and keep the retrieval-quality floor the retired check_oracle
     invariant used to assert — recall@10 ≥ 0.7 vs brute-force cosine at
@@ -507,11 +497,11 @@ def test_ivf_topk_portable_contract_and_recall(spark, sf_dir):
     )
     out = ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=8,
-        query_id_col="query_id", portable=True,
+        query_id_col="query_id",
     ).collect()
     again = ivf_topk(
         emb, queries, k=10, n_centroids=16, n_probe=8,
-        query_id_col="query_id", portable=True,
+        query_id_col="query_id",
     ).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, again))
     by_q = {}
@@ -559,7 +549,7 @@ def test_lsh_clustered_portable_recall(spark, sf_dir):
         (r.query_id, r.neighbor_id)
         for r in lsh_ann_topk(
             ce, queries, k=10, n_planes=10, n_tables=16,
-            query_id_col="query_id", dim=64, portable=True,
+            query_id_col="query_id", dim=64,
         ).collect()
     }
     recall = len(got & exact) / len(exact)
@@ -571,10 +561,9 @@ def test_ivf_clustered_portable_recall(spark, sf_dir):
     Lloyd lists, n_probe=1 — each query reads 1/16 of the corpus) must
     keep its production-shaped recall floor vs brute-force cosine on the
     planted-cluster corpus — the quality claim the retired check_oracle
-    invariant asserted (floor 0.9, the invariant's bound; the numpy
-    trainer measured 1.00 and the portable trainer's decimal-exact Lloyd
-    steps converge to the same planted partition). Replay fidelity is
-    the DuckDB oracle's job."""
+    invariant asserted (floor 0.9, the invariant's bound; the decimal-
+    exact Lloyd steps converge to the planted partition). Replay
+    fidelity is the DuckDB oracle's job."""
     from aws_cli_data_pipeline_tools_spark.catalog.llmops import (
         clustered_embeddings,
     )
@@ -596,7 +585,7 @@ def test_ivf_clustered_portable_recall(spark, sf_dir):
         (r.query_id, r.neighbor_id)
         for r in ivf_topk(
             ce, queries, k=10, n_centroids=16, n_probe=1,
-            query_id_col="query_id", portable=True,
+            query_id_col="query_id",
         ).collect()
     }
     # self-match must always be retrievable at this operating point
@@ -1057,8 +1046,8 @@ def test_mmr_rerank_string_ids_and_single_query_contract(spark):
 
 
 def test_embedding_cosine_pairs_lsh_matches_exact_on_near_dups(spark):
-    """r8 review: the n_planes>0 path (now routed through similarity's
-    vectorized _bucketize) must still find the planted near-duplicates
+    """r8 review: the n_planes>0 path (routed through similarity's
+    vectorized _bucketize_portable) must still find the planted near-duplicates
     the exact path finds — same-orthant vectors always share a bucket."""
     rows = [
         (1, [1.0, 0.0, 0.0]),
@@ -1573,3 +1562,304 @@ def test_simhash_combination_blocking_identical_output(spark):
     # combination blocks would be sub-4-bit at max_hamming > 13 → the
     # auto mode falls back to pigeonhole rather than violating the guard
     assert dedup._simhash_auto_blocks(df, 14) is None
+
+
+def test_normalize_centroid_matrix_matches_distributed_decimal(spark):
+    # adversarial magnitudes: tiny, large, negative, zero row
+    cents = [
+        [0.1, -0.25, 3.75, 1e-7],
+        [123456.789, -0.0001, 2.5, 9.99],
+        [0.0, 0.0, 0.0, 0.0],
+    ]
+    got = similarity._normalize_centroid_matrix(spark, cents)
+    # distributed reference: the decimal group-sum normalize the rewrite
+    # replaced (sqrt(CAST(sum(CAST(c*c AS DECIMAL(38,10))) AS DOUBLE)))
+    rows = [
+        (li, pos, float(v))
+        for li, cv in enumerate(cents)
+        for pos, v in enumerate(cv)
+    ]
+    c = spark.createDataFrame(rows, "list_id int, pos int, c double")
+    nrm = c.groupBy("list_id").agg(
+        F.sqrt(
+            F.sum((F.col("c") * F.col("c")).cast("decimal(38,10)")).cast(
+                "double"
+            )
+        ).alias("nrm")
+    )
+    ref_rows = (
+        c.join(nrm, "list_id")
+        .select(
+            "list_id",
+            "pos",
+            F.when(F.col("nrm") > 0, F.col("c") / F.col("nrm"))
+            .otherwise(F.col("c"))
+            .alias("c"),
+        )
+        .collect()
+    )
+    ref: dict[tuple[int, int], float] = {
+        (r["list_id"], r["pos"]): r["c"] for r in ref_rows
+    }
+    for li, cv in enumerate(got):
+        for pos, v in enumerate(cv):
+            assert v == ref[(li, pos)], (li, pos)  # bit-exact, no tolerance
+
+
+def test_centroid_literal_array_roundtrips_exact_doubles(spark):
+    vals = [0.1 + 0.2, 1e-300, -1.7976931348623157e308, 3.141592653589793]
+    row = (
+        spark.sql("SELECT 1 AS z")
+        .select(similarity._centroid_literal_array(vals).alias("a"))
+        .collect()[0]
+    )
+    assert list(row["a"]) == vals  # repr round-trip is exact
+
+
+def test_ivf_nullsafe_join_matches_equijoin_with_null_vectors(spark):
+    # corpus with a NULL embedding row: under the old equi-join the null
+    # vector was dropped by the isNotNull filter; the null-safe join with
+    # a probe-side not-null filter must produce the identical top-k
+    import random
+
+    random.seed(7)
+    rows = [
+        (i, [random.uniform(-1, 1) for _ in range(8)]) for i in range(40)
+    ]
+    rows.append((99, None))
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>"
+    )
+    queries = emb.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    out = similarity.ivf_topk(
+        emb, queries, k=5, n_centroids=4, n_probe=2,
+        query_id_col="query_id",
+    ).collect()
+    ids = {r["neighbor_id"] for r in out}
+    assert 99 not in ids  # the null-vector row can never be a candidate
+    assert {r["query_id"] for r in out} == {0, 1, 2}
+    # ranks are dense 1..k per query with a total tie-break order
+    per_q = {}
+    for r in out:
+        per_q.setdefault(r["query_id"], []).append(r["rank"])
+    for q, ranks in per_q.items():
+        assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
+
+
+def test_kmeans_portable_release_cache_contract(spark):
+    import random
+
+    random.seed(3)
+    emb = spark.createDataFrame(
+        [(i, [random.uniform(-1, 1) for _ in range(6)]) for i in range(30)],
+        "vec_id long, embedding array<float>",
+    )
+    out = similarity.kmeans_clusters(emb, n_centroids=3, refine_iters=1)
+    assert hasattr(out, "release_cache")
+    rows = out.collect()
+    out.release_cache()  # must be callable post-action (no-op now)
+    assert len(rows) == 30
+    assert {r["list_id"] for r in rows} <= {0, 1, 2}
+
+
+def _r13_trainer_replica(spark, corpus, id_col, vec_col, k, iters):
+    """Inline replica of the r13 trainer shape (seed collect →
+    _normalize_centroid_matrix → per-iter means collect →
+    _normalize_centroid_matrix) — the reference the r14 folded-action
+    trainer must match float-for-float."""
+    from aws_cli_data_pipeline_tools_spark.functions import portable_hash64
+
+    src = corpus.filter(F.col(vec_col).isNotNull())
+    ph = portable_hash64(F.col(id_col).cast("string"))
+    seed_rows = (
+        src.select(
+            F.col(id_col).alias("id"),
+            ph.alias("__ph"),
+            F.col(vec_col).alias("__v"),
+        )
+        .orderBy("__ph", "id")
+        .limit(k)
+        .collect()
+    )
+    cents = similarity._normalize_centroid_matrix(
+        spark, [[float(x) for x in r["__v"]] for r in seed_rows]
+    )
+    for _ in range(iters):
+        assigned = src.select(
+            F.col(vec_col).alias("__v"),
+            F.element_at(
+                similarity._portable_ranked_lists(vec_col, cents), 1
+            )["list_id"].alias("list_id"),
+        )
+        mean_rows = (
+            assigned.select(
+                "list_id", F.posexplode("__v").alias("pos", "xf")
+            )
+            .groupBy("list_id", "pos")
+            .agg(
+                (
+                    F.sum(F.col("xf").cast("double").cast("decimal(38,10)"))
+                    .cast("double")
+                    / F.count("*")
+                ).alias("m")
+            )
+            .collect()
+        )
+        means = {(r["list_id"], r["pos"]): r["m"] for r in mean_rows}
+        merged = [
+            [means.get((li, p), cents[li][p]) for p in range(len(cents[li]))]
+            for li in range(len(cents))
+        ]
+        cents = similarity._normalize_centroid_matrix(spark, merged)
+    return cents
+
+
+def test_folded_trainer_matches_r13_shape_common_path(spark):
+    import random
+
+    random.seed(17)
+    emb = spark.createDataFrame(
+        [(i, [random.uniform(-1, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    got = similarity._portable_centroid_literals(
+        emb, "vec_id", "embedding", 4, 2
+    )
+    ref = _r13_trainer_replica(spark, emb, "vec_id", "embedding", 4, 2)
+    assert got == ref  # bit-exact, no tolerance
+
+
+def test_folded_trainer_matches_r13_shape_empty_cluster(spark):
+    # two identical vectors, k=2: the argmax tie sends both rows to
+    # list 0, list 1 is empty → the fallback (legacy exact) branch runs
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.5]), (2, [1.0, 0.5])],
+        "vec_id long, embedding array<float>",
+    )
+    got = similarity._portable_centroid_literals(
+        emb, "vec_id", "embedding", 2, 2
+    )
+    ref = _r13_trainer_replica(spark, emb, "vec_id", "embedding", 2, 2)
+    assert got == ref
+
+
+def test_folded_trainer_matches_r13_shape_ragged_vectors(spark):
+    # vectors of different lengths: mean positions can be missing or
+    # extend past the centroid dim, either of which must route through
+    # the fallback — and in all cases equal the r13 replica exactly
+    emb = spark.createDataFrame(
+        [
+            (1, [1.0, 0.25]),
+            (2, [0.5, -1.0, 2.0, 4.0]),
+            (3, [0.0, 3.0, -2.0]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    for k in (1, 2):
+        got = similarity._portable_centroid_literals(
+            emb, "vec_id", "embedding", k, 2
+        )
+        ref = _r13_trainer_replica(spark, emb, "vec_id", "embedding", k, 2)
+        assert got == ref, k
+
+
+def test_band_entries_sql_parse_matches_column_form(spark):
+    # r14: minhash_band_entries builds its bands-wide struct array via
+    # ONE SQL parse; keys must equal the r13 Column-API form exactly
+    from aws_cli_data_pipeline_tools_spark.operators import dedup
+
+    sides = spark.createDataFrame(
+        [(1, list(range(64))), (2, [7 * i + 3 for i in range(64)])],
+        "id long, sig array<long>",
+    )
+    got = sorted(
+        tuple(r) for r in dedup.minhash_band_entries(sides, 64, 32).collect()
+    )
+    rpb = 2
+    ref = sorted(
+        tuple(r)
+        for r in sides.select(
+            "id",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(b).alias("band"),
+                            F.xxhash64(
+                                F.slice("sig", b * rpb + 1, rpb)
+                            ).alias("bkey"),
+                        )
+                        for b in range(32)
+                    ]
+                )
+            ).alias("bk"),
+        )
+        .select("id", "bk.band", "bk.bkey")
+        .collect()
+    )
+    assert got == ref
+
+
+def test_double_array_sql_nonfinite_literals(spark):
+    import math
+
+    vals = [float("nan"), float("inf"), float("-inf"), 0.1 + 0.2]
+    row = (
+        spark.sql("SELECT 1 AS z")
+        .select(F.expr(similarity._double_array_sql(vals)).alias("a"))
+        .collect()[0]
+    )
+    got = list(row["a"])
+    assert math.isnan(got[0])
+    assert got[1] == float("inf")
+    assert got[2] == float("-inf")
+    assert got[3] == 0.1 + 0.2
+
+
+def test_ivf_topk_nested_vector_column(spark):
+    """A dotted vec_col names a nested field, as with F.col: ivf_topk over
+    a struct<embedding: array<float>> column returns the flat column's
+    rows (ADVICE r14)."""
+    import random
+
+    random.seed(5)
+    flat = spark.createDataFrame(
+        [(i, [random.uniform(-1, 1) for _ in range(8)]) for i in range(40)],
+        "vec_id long, embedding array<float>",
+    )
+    nested = flat.select("vec_id", F.struct("embedding").alias("meta"))
+
+    def top(df, vec_col):
+        q = df.filter(F.col("vec_id") < 3).withColumnRenamed(
+            "vec_id", "query_id"
+        )
+        return similarity.ivf_topk(
+            df, q, k=5, n_centroids=4, n_probe=2, vec_col=vec_col
+        ).collect()
+
+    want = top(flat, "embedding")
+    assert sorted(map(tuple, top(nested, "meta.embedding"))) == sorted(
+        map(tuple, want)
+    )
+    assert {r.query_id for r in want} == {0, 1, 2}
+
+
+def test_ivf_index_matches_ann_ivf_topk_oracle_entry(spark, sf_dir, tmp_path):
+    """The persisted index at ann_ivf_topk's operating point (16 lists,
+    8 probes, k=10, queries vec_id < 5) returns exactly that entry's
+    rows — and the entry is checked against its DuckDB oracle, so the
+    index path has an exact oracle too."""
+    from aws_cli_data_pipeline_tools_spark.catalog import all_specs
+
+    want = all_specs()["ann_ivf_topk"].fn(spark, sf_dir).collect()
+    emb = load_table(spark, "embeddings", sf_dir)
+    queries = emb.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    idx = str(tmp_path / "ivf16")
+    similarity.build_ivf_index(emb, idx, n_centroids=16)
+    got = similarity.ivf_index_topk(spark, idx, queries, k=10, n_probe=8)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want))
+    assert {r.query_id for r in want} == {0, 1, 2, 3, 4}

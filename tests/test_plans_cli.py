@@ -269,7 +269,7 @@ BOUNDED_UNPARTITIONED_WINDOWS = {
     ("curriculum_length_schedule", "band"): "fixed band label set",
     ("embedding_cluster_profile", "__ph"):
         "k-means seeding rank over the orderBy().limit(n_centroids) "
-        "frame — <=16 rows by construction (kmeans_clusters_portable)",
+        "frame — <=16 rows by construction (kmeans_clusters)",
     ("events_burst_runs", "day"): "calendar-day domain",
     ("events_cusum_changepoint", "day"): "calendar-day domain",
     ("hybrid_rrf_retrieval", "rrf_score"): "post-LIMIT fusion pool",

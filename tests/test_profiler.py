@@ -337,3 +337,23 @@ def test_profile_strings_temporal_agg_type_collision_r10(spark):
     ).selectExpr("CAST(agg_type AS DATE) AS agg_type")
     with _pytest.raises(ValueError, match="agg_type"):
         profile_temporal(df2)
+
+
+def test_narrow_scan_gates_on_resolved_max_partition_bytes(spark, monkeypatch):
+    """A session set to ``64m`` gates on 64 MiB, as Spark resolves it —
+    string-stripping the conf could not parse the suffix and fell back
+    to 128 MiB."""
+    from aws_cli_data_pipeline_tools_spark import sources
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    gate = (64 << 20) * spark.sparkContext.defaultParallelism
+    df = spark.range(1)
+    try:
+        spark.conf.set(key, "64m")
+        monkeypatch.setattr(sources, "plan_size_bytes", lambda _df: gate - 1)
+        assert profiler._narrow_scan(df)
+        monkeypatch.setattr(sources, "plan_size_bytes", lambda _df: gate)
+        assert not profiler._narrow_scan(df)
+    finally:
+        spark.conf.set(key, old)

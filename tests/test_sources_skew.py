@@ -1,5 +1,6 @@
-"""Source/sink round-trips (parquet/csv/json/orc, partitioned writes) and
-skew-salting operators."""
+"""Source/sink round-trips (parquet/csv/json/orc, partitioned writes),
+skew-salting operators, and the ``fan_out`` parallelism floor with its
+scan-width memo."""
 
 import os
 
@@ -8,7 +9,12 @@ from pyspark.sql import functions as F
 
 from aws_cli_data_pipeline_tools_spark import plans
 from aws_cli_data_pipeline_tools_spark.operators import skew
-from aws_cli_data_pipeline_tools_spark.sources import load_table, reader, write
+from aws_cli_data_pipeline_tools_spark.sources import (
+    fan_out,
+    load_table,
+    reader,
+    write,
+)
 
 
 @pytest.mark.parametrize("fmt", ["parquet", "orc", "json", "csv"])
@@ -581,3 +587,55 @@ def test_write_zordered_rejects_reserved_column(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="__z"):
         write_zordered(df, str(tmp_path / "z"), "a", "b")
+
+
+def test_fan_out_raises_parallelism_of_narrow_frame(spark):
+    df = spark.range(1000).coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
+    wide = fan_out(df)
+    assert (
+        wide.rdd.getNumPartitions()
+        == spark.sparkContext.defaultParallelism
+    )
+    # multiset of rows unchanged
+    assert sorted(r.id for r in wide.collect()) == list(range(1000))
+
+
+def test_fan_out_never_repartitions_down(spark):
+    target = spark.sparkContext.defaultParallelism
+    df = spark.range(10_000).repartition(target + 7)
+    assert fan_out(df).rdd.getNumPartitions() == target + 7
+
+
+def test_fan_out_env_off(spark, monkeypatch):
+    monkeypatch.setenv("SPARKGRAFT_SCAN_FANOUT", "off")
+    df = spark.range(100).coalesce(1)
+    assert fan_out(df).rdd.getNumPartitions() == 1
+
+
+def test_fan_out_streaming_passthrough(spark, tmp_path):
+    src = str(tmp_path / "s")
+    spark.range(3).write.parquet(src)
+    stream = spark.readStream.schema("id long").parquet(src)
+    assert fan_out(stream) is stream
+
+
+def test_scan_width_memo_follows_max_partition_bytes(spark, tmp_path):
+    """The width memo keys on the confs that decide a scan's static
+    partition count: the same plan read under a smaller
+    maxPartitionBytes later in the session gets its new, wider count."""
+    from aws_cli_data_pipeline_tools_spark.sources import scan_parallelism
+
+    src = str(tmp_path / "w")
+    spark.range(200_000).coalesce(1).write.parquet(src)
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "128m")
+        before = scan_parallelism(spark.read.parquet(src))
+        spark.conf.set(key, "64k")
+        after = scan_parallelism(spark.read.parquet(src))
+        assert after == spark.read.parquet(src).rdd.getNumPartitions()
+    finally:
+        spark.conf.set(key, old)
+    assert before == 1 and after > before

@@ -31,8 +31,8 @@ def main() -> None:
     )
     from aws_cli_data_pipeline_tools_spark.operators import similarity
     from aws_cli_data_pipeline_tools_spark.operators.similarity import (
-        _bucketize,
-        _hyperplane_tables,
+        _bucketize_portable,
+        lsh_parity_planes,
     )
     from aws_cli_data_pipeline_tools_spark.session import get_spark
     from aws_cli_data_pipeline_tools_spark.catalog.llmops import (
@@ -78,17 +78,18 @@ SELECT query_id, neighbor_id FROM r WHERE rank <= 10
         return sum(len(got.get(q, set()) & exact[q]) for q in exact) / denom
 
     print(f"corpus={n_corpus} queries={len(exact)} sf_dir={sf_dir}")
-    print("\nLSH (random hyperplanes) on clustered fixture:")
+    print("\nLSH (md5-parity hyperplanes) on clustered fixture:")
     print("| planes | tables | cand_frac | recall@10 |")
     print("|---|---|---|---|")
     for planes, tables in [(6, 4), (8, 4), (8, 8), (8, 16), (10, 16),
                            (12, 16), (10, 32)]:
-        pl = _hyperplane_tables(64, planes, tables, seed=7)
-        c_b = _bucketize(
+        # lsh_ann_topk's planes at its default seed=7
+        pl = lsh_parity_planes(64, planes, tables, "lsh-v1|7")
+        c_b = _bucketize_portable(
             emb.select(F.col("vec_id").alias("neighbor_id"),
                        F.col("embedding").alias("cv")),
             "neighbor_id", "cv", pl)
-        q_b = _bucketize(
+        q_b = _bucketize_portable(
             queries.select("query_id", F.col("embedding").alias("qv")),
             "query_id", "qv", pl)
         n_cand = (
