@@ -60,6 +60,8 @@ def register_sql(
     ``sql`` is used for both engines when the dialects agree; otherwise pass
     ``spark_sql`` + ``duck_sql``. Views for all fixture tables are registered
     before execution (the engine-side analog of Athena's Glue catalog).
+    Their parquet schemas are memoized per file identity, so a warm call
+    runs no schema-inference job (``sources.read_parquet``).
     """
     s_sql = spark_sql or sql
     d_sql = duck_sql or sql

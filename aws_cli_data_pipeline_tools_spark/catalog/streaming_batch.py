@@ -14,8 +14,6 @@ Gap arithmetic uses integer epoch microseconds on both engines.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -181,9 +179,7 @@ def streaming_tumbling_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = st.tumbling_counts(stream).withColumn(
         "sum_value", F.round(F.col("sum_value").cast("double"), 5)
     )
-    name = f"q_stream_tumbling_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(agg, name, output_mode="complete", shuffle_partitions=8)
-    return spark.table(name).orderBy("win_start", "event_type")
+    return st.drain(agg, "complete").orderBy("win_start", "event_type")
 
 
 @register(
@@ -211,10 +207,8 @@ def stateful_user_totals_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value", F.round(F.col("value") * 100).cast("bigint")
     )
     out = running_user_totals(stream)
-    name = f"q_stream_stateful_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(out, name, output_mode="update", shuffle_partitions=8)
     return (
-        spark.table(name)
+        st.drain(out, "update")
         .filter(~F.col("closed"))
         .groupBy("user_id")
         .agg(
@@ -401,10 +395,8 @@ def streaming_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = st.events_file_stream(spark, sf_dir)
     joined = st.error_click_join_stream(stream, window="6 hours")
-    name = f"q_stream_join_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(joined, name, output_mode="append", shuffle_partitions=8)
     return (
-        spark.table(name)
+        st.drain(joined, "append")
         .groupBy("user_id", "error_id")
         .agg(F.count("*").alias("n_clicks"))
         .orderBy("user_id", "error_id")
@@ -512,9 +504,7 @@ def streaming_join_outer_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = st.error_click_join_stream(
         stream, window="6 hours", watermark="12 hours", how="leftOuter"
     )
-    name = f"q_stream_ojoin_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(joined, name, output_mode="append", shuffle_partitions=8)
-    return spark.table(name).orderBy("user_id", "error_id", "click_id")
+    return st.drain(joined, "append").orderBy("user_id", "error_id", "click_id")
 
 
 @register(
@@ -548,9 +538,7 @@ def streaming_join_right_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = st.error_click_join_stream(
         stream, window="6 hours", watermark="12 hours", how="rightOuter"
     )
-    name = f"q_stream_rjoin_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(joined, name, output_mode="append", shuffle_partitions=8)
-    return spark.table(name).orderBy("user_id", "click_id", "error_id")
+    return st.drain(joined, "append").orderBy("user_id", "click_id", "error_id")
 
 
 @register(
@@ -579,9 +567,7 @@ def streaming_join_full_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = st.error_click_join_stream(
         stream, window="6 hours", watermark="12 hours", how="fullOuter"
     )
-    name = f"q_stream_fjoin_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(joined, name, output_mode="append", shuffle_partitions=8)
-    return spark.table(name).orderBy("user_id", "error_id", "click_id")
+    return st.drain(joined, "append").orderBy("user_id", "error_id", "click_id")
 
 
 def _dstat(fn: str, x: str) -> str:
@@ -721,9 +707,7 @@ def streaming_enrich_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("sum_value").cast("double"), 5).alias("sum_value"),
         )
     )
-    name = f"q_stream_enrich_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(agg, name, output_mode="complete", shuffle_partitions=8)
-    return spark.table(name).orderBy("win_start", "c_mktsegment")
+    return st.drain(agg, "complete").orderBy("win_start", "c_mktsegment")
 
 
 @register(
@@ -814,9 +798,7 @@ def streaming_session_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = st.session_counts(stream).withColumn(
         "sum_value", F.round(F.col("sum_value").cast("double"), 5)
     )
-    name = f"q_stream_session_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(agg, name, output_mode="complete", shuffle_partitions=8)
-    return spark.table(name).orderBy("user_id", "session_start")
+    return st.drain(agg, "complete").orderBy("user_id", "session_start")
 
 
 @register(
@@ -879,9 +861,7 @@ def streaming_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = st.sliding_counts(stream).withColumn(
         "sum_value", F.round(F.col("sum_value").cast("double"), 5)
     )
-    name = f"q_stream_sliding_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(agg, name, output_mode="complete", shuffle_partitions=8)
-    return spark.table(name).orderBy("win_start")
+    return st.drain(agg, "complete").orderBy("win_start")
 
 
 @register(
@@ -904,9 +884,7 @@ def streaming_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = st.events_file_stream(spark, sf_dir)
     out = st.dedup_stream(stream).select("user_id", "event_type")
-    name = f"q_stream_dedup_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(out, name, output_mode="append", shuffle_partitions=8)
-    return spark.table(name).orderBy("user_id", "event_type")
+    return st.drain(out, "append").orderBy("user_id", "event_type")
 
 
 @register(
@@ -1227,9 +1205,7 @@ def streaming_drift_live(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("win.start").alias("win_start"), "event_type", "o"
         )
     )
-    name = f"q_stream_drift_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(agg, name, output_mode="complete", shuffle_partitions=8)
-    obs = spark.table(name)
+    obs = st.drain(agg, "complete")
     ev = load_table(spark, "events", sf_dir)
     ref = ev.groupBy("event_type").agg(F.count("*").alias("nt"))
     tot = ev.agg(F.count("*").alias("n"))
@@ -1318,9 +1294,7 @@ def streaming_trending_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("win.start").alias("win_start"), "token", "n")
     )
-    name = f"q_stream_trend_{uuid.uuid4().hex[:8]}"  # rerun-safe sink name
-    st.run_to_memory(agg, name, output_mode="complete", shuffle_partitions=8)
-    cnt = spark.table(name)
+    cnt = st.drain(agg, "complete")
     w = Window.partitionBy("win_start").orderBy(
         F.col("n").desc(), F.col("token")
     )
@@ -1445,9 +1419,7 @@ def streaming_session_transcripts_live(
 
     stream = st.events_file_stream(spark, sf_dir)
     out = session_transcripts_stream(stream)
-    name = f"q_stream_transcript_{uuid.uuid4().hex[:8]}"
-    st.run_to_memory(out, name, output_mode="update", shuffle_partitions=8)
-    drained = spark.table(name)
+    drained = st.drain(out, "update")
     # keep each (user, session_id)'s NEWEST emission (max emit_seq), not
     # its max-n_turns row: provisional ids can shift when a late event
     # opens an earlier session, so a stale provisional row under a

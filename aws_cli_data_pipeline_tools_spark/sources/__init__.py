@@ -10,6 +10,7 @@ scale the same calls read s3a:// paths unchanged.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
@@ -222,9 +223,92 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df
 
 
+#: Memo of parquet schemas Spark inferred, keyed by (absolute path, the
+#: ``(st_ino, st_size, st_mtime_ns)`` of every leaf file, the resolved
+#: inference confs) — see ``read_parquet``.
+_SCHEMA_CACHE: dict[tuple, T.StructType] = {}
+_SCHEMA_CACHE_MAX = 1024
+
+#: The SQLConf getters that decide an inferred parquet schema: the eight
+#: that build ``ParquetToSparkSchemaConverter``, plus the footer choice
+#: of ``ParquetUtils.inferSchema`` (merge, summary files, corrupt files).
+_PARQUET_INFERENCE_CONFS = (
+    "isParquetBinaryAsString",
+    "isParquetINT96AsTimestamp",
+    "caseSensitiveAnalysis",
+    "parquetInferTimestampNTZEnabled",
+    "legacyParquetNanosAsLong",
+    "parquetFieldIdReadEnabled",
+    "parquetIgnoreVariantAnnotation",
+    "parquetReaderRespectUnknownTypeAnnotation",
+    "isParquetSchemaMergingEnabled",
+    "isParquetSchemaRespectSummaries",
+    "ignoreCorruptFiles",
+)
+
+
+def _file_identity(path: str) -> tuple | None:
+    """``(relative path, st_ino, st_size, st_mtime_ns)`` of every leaf file
+    under ``path`` (or of ``path`` itself), or None when the local file
+    system cannot see it (``s3a://`` and other remote or glob paths)."""
+    try:
+        st = os.stat(path)
+    except (OSError, ValueError):
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+    leaves = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            try:
+                st = os.stat(full)
+            except OSError:  # removed mid-walk: the next call re-walks
+                return None
+            leaves.append((os.path.relpath(full, path), st.st_ino,
+                           st.st_size, st.st_mtime_ns))
+    return tuple(sorted(leaves))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a local path's schema once.
+
+    Inference reads the file footers in a Spark job (about 0.1 s warm per
+    table). The inferred ``StructType`` is memoized under the absolute
+    path, the identity of every leaf file and the SQLConf values that
+    decide inference, read as Spark resolves them; a warm call reads with
+    ``spark.read.schema(cached)``, which runs no job. Rewriting a file,
+    adding one or flipping e.g. ``inferTimestampNTZ`` gives a new key.
+    Only the schema is cached: every call returns a new frame with fresh
+    expression ids, so two reads of one table self-join unambiguously,
+    and no data is cached. Paths ``os.stat`` cannot see read as before.
+    """
+    ident = _file_identity(path)
+    key = None
+    if ident is not None:
+        conf = _sql_conf(spark)
+        key = (
+            os.path.abspath(path),
+            ident,
+            tuple(bool(getattr(conf, g)()) for g in _PARQUET_INFERENCE_CONFS),
+        )
+        cached = _SCHEMA_CACHE.get(key)
+        if cached is not None:
+            return spark.read.schema(cached).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
+            _SCHEMA_CACHE.clear()
+        _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Read one fixture table. Columnar parquet scan — Catalyst pushes
     filters/projection into the scan (check .explain for PushedFilters).
+    The schema is inferred once per file identity and inference conf
+    (``read_parquet``): a warm call runs no Spark job and returns a new
+    frame.
 
     Timestamp normalization: the fixture generator has shipped ``events.ts``
     both as parquet TIMESTAMP(NANOS) (read as int64 with
@@ -235,7 +319,7 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     naive TIMESTAMP. The NTZ→TS cast preserves wall-clock time (interpreted
     in the session timezone), matching what DuckDB reads.
     """
-    d = sf_dir or DEFAULT_SF_DIR
+    path = os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet")
     if name == "events":
         # nanosAsLong is only needed for the events fixture's
         # TIMESTAMP(NANOS) column; the old unconditional set on EVERY
@@ -248,10 +332,8 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
         # events-reading session genuinely needs it for its lifetime
         # (get_spark pins it at session build anyway).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(
-            spark.read.parquet(os.path.join(d, f"{name}.parquet"))
-        )
-    df = spark.read.parquet(os.path.join(d, f"{name}.parquet"))
+        return normalize_event_ts(read_parquet(spark, path))
+    df = read_parquet(spark, path)
     ntz = [f.name for f in df.schema.fields
            if isinstance(f.dataType, T.TimestampNTZType)]
     for c in ntz:
@@ -283,7 +365,9 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
 
 def register_views(spark: SparkSession, sf_dir: str | None = None, tables: list[str] | None = None) -> None:
     """Register every fixture table as a temp view so ``spark.sql`` queries
-    name them directly (the engine-side analog of Athena's Glue catalog)."""
+    name them directly (the engine-side analog of Athena's Glue catalog).
+    Each view binds a new ``load_table`` frame; once the schemas are
+    memoized, a warm call runs no Spark job."""
     for name in tables or TABLES:
         load_table(spark, name, sf_dir).createOrReplaceTempView(name)
 

@@ -18,11 +18,12 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources import load_table, normalize_event_ts
+from ..sources import load_table, normalize_event_ts, read_parquet
 from ..sources import scratch_dir as _pid_scratch_dir
 
 
@@ -52,7 +53,7 @@ def events_file_stream(
     shutil.copy(src, os.path.join(dst_dir, "part-0.parquet"))
 
     batch_schema = load_table(spark, "events", sf_dir).schema
-    raw_schema = spark.read.parquet(src).schema  # ts: int64 ns or TIMESTAMP_NTZ
+    raw_schema = read_parquet(spark, src).schema  # ts: int64 ns or TIMESTAMP_NTZ
     stream = normalize_event_ts(spark.readStream.schema(raw_schema).parquet(dst_dir))
     if stream.schema != batch_schema:  # explicit: survives python -O
         raise RuntimeError(
@@ -243,3 +244,20 @@ def run_to_memory(
         if shuffle_partitions:
             spark.conf.set(key, old)
     return q
+
+
+def drain(stream_df: DataFrame, output_mode: str) -> DataFrame:
+    """Drain a bounded stream and return its rows as a batch frame that
+    leaves no temp view behind: names a memory sink (rerun-safe uuid),
+    drains it with ``run_to_memory`` on 8 shuffle/state partitions (sized
+    to a bounded replay, see there), binds ``spark.table(name)`` and drops
+    the sink's view. The bound frame keeps its analyzed plan over the
+    sink's rows, so it still reads them after the drop, and a long-lived
+    session gains no table per call."""
+    spark = stream_df.sparkSession
+    name = f"q_stream_{uuid.uuid4().hex[:8]}"
+    run_to_memory(stream_df, name, output_mode=output_mode, shuffle_partitions=8)
+    try:
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)

@@ -1,18 +1,23 @@
 """Source/sink round-trips (parquet/csv/json/orc, partitioned writes),
-skew-salting operators, and the ``fan_out`` parallelism floor with its
-scan-width memo."""
+skew-salting operators, the ``fan_out`` parallelism floor with its
+scan-width memo, and the parquet schema memo under ``load_table``."""
 
 import os
+import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aws_cli_data_pipeline_tools_spark import plans
 from aws_cli_data_pipeline_tools_spark.operators import skew
 from aws_cli_data_pipeline_tools_spark.sources import (
     fan_out,
     load_table,
+    read_parquet,
     reader,
+    register_views,
     write,
 )
 
@@ -639,3 +644,131 @@ def test_scan_width_memo_follows_max_partition_bytes(spark, tmp_path):
     finally:
         spark.conf.set(key, old)
     assert before == 1 and after > before
+
+
+# ---------------------------------------------------------------- schema memo
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it fired, counted under a
+    job group of its own with the ``StatusTracker``."""
+    sc = spark.sparkContext
+    group = f"schema-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_arrow(path, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path))
+
+
+def test_warm_register_views_fires_no_job(spark, sf_dir):
+    register_views(spark, sf_dir)
+    _, jobs = _jobs(spark, lambda: register_views(spark, sf_dir))
+    assert jobs == 0
+    assert spark.table("nation").count() == 25
+
+
+def test_schema_memo_invalidated_by_new_file(spark, tmp_path):
+    """A fixture replaced by a new file (new inode) is inferred again."""
+    path = str(tmp_path / "t.parquet")
+    _write_arrow(path, a=[1, 2, 3])
+    read_parquet(spark, path)
+    first, jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0 and first.columns == ["a"]
+    _write_arrow(tmp_path / "new.parquet", a=[1, 2], b=["x", "y"])
+    os.replace(tmp_path / "new.parquet", path)
+    again = read_parquet(spark, path)
+    assert again.columns == ["a", "b"]
+    assert sorted(map(tuple, again.collect())) == [(1, "x"), (2, "y")]
+
+
+def test_schema_memo_invalidated_by_file_added_to_directory(spark, tmp_path):
+    """A directory dataset's key holds every leaf file: adding one infers
+    again."""
+    path = tmp_path / "d"
+    path.mkdir()
+    _write_arrow(path / "part-0.parquet", id=[1, 2, 3])
+    read_parquet(spark, str(path))
+    _, jobs = _jobs(spark, lambda: read_parquet(spark, str(path)))
+    assert jobs == 0
+    _write_arrow(path / "part-1.parquet", id=[4])
+    again, jobs = _jobs(spark, lambda: read_parquet(spark, str(path)))
+    assert jobs >= 1
+    assert sorted(r.id for r in again.collect()) == [1, 2, 3, 4]
+
+
+def test_schema_memo_invalidated_by_same_size_rewrite(spark, tmp_path):
+    """An in-place rewrite keeping the inode and the byte size still
+    changes the key through its mtime."""
+    path = str(tmp_path / "t.parquet")
+    _write_arrow(path, aa=[1, 2, 3])
+    read_parquet(spark, path)
+    first, jobs = _jobs(spark, lambda: read_parquet(spark, path))
+    assert jobs == 0 and first.columns == ["aa"]
+    before = os.stat(path)
+    _write_arrow(tmp_path / "other.parquet", bb=[1, 2, 3])
+    shutil.copyfile(tmp_path / "other.parquet", path)  # truncate + write
+    after = os.stat(path)
+    assert (after.st_ino, after.st_size) == (before.st_ino, before.st_size)
+    again = read_parquet(spark, path)
+    assert again.columns == ["bb"]
+    assert sorted(r.bb for r in again.collect()) == [1, 2, 3]
+
+
+def test_schema_memo_follows_infer_timestamp_ntz(spark, tmp_path):
+    """Flipping ``inferTimestampNTZ`` between calls gives the schema a
+    fresh inference gives; flipping back hits the first entry again."""
+    import datetime as dt
+
+    path = str(tmp_path / "ts.parquet")
+    _write_arrow(path, ts=[dt.datetime(2024, 1, 1, 12, 30)])  # not UTC-adjusted
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        read_parquet(spark, path)
+        ntz, jobs = _jobs(spark, lambda: read_parquet(spark, path))
+        assert jobs == 0
+        assert isinstance(ntz.schema["ts"].dataType, T.TimestampNTZType)
+        spark.conf.set(key, "false")
+        got = read_parquet(spark, path).schema
+        assert got == spark.read.parquet(path).schema
+        assert isinstance(got["ts"].dataType, T.TimestampType)
+        spark.conf.set(key, "true")
+        back, jobs = _jobs(spark, lambda: read_parquet(spark, path))
+        assert jobs == 0 and back.schema == ntz.schema
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_load_table_frames_self_join_unambiguously(spark, sf_dir):
+    """Only the schema is memoized: a second ``load_table`` of one table
+    is a new frame, so ``a.k == b.k`` is a self-join, not an ambiguity."""
+    a = load_table(spark, "nation", sf_dir)
+    b, jobs = _jobs(spark, lambda: load_table(spark, "nation", sf_dir))
+    assert jobs == 0 and a is not b
+    joined = a.join(b, a.n_nationkey == b.n_nationkey).select(
+        a.n_nationkey, b.n_name
+    )
+    assert joined.count() == 25
+
+
+def test_schema_memo_is_bounded(spark, tmp_path, monkeypatch):
+    from aws_cli_data_pipeline_tools_spark import sources
+
+    monkeypatch.setattr(sources, "_SCHEMA_CACHE", {})
+    monkeypatch.setattr(sources, "_SCHEMA_CACHE_MAX", 3)
+    for i in range(5):
+        path = str(tmp_path / f"t{i}.parquet")
+        _write_arrow(path, **{f"c{i}": [i]})
+        assert read_parquet(spark, path).columns == [f"c{i}"]
+        assert 1 <= len(sources._SCHEMA_CACHE) <= 3

@@ -492,3 +492,23 @@ def test_quality_gate_eager_rules_and_flip_cleanup_r10(spark, tmp_path):
         "flipped verdict left the stale batch in good_dir"
     )
     assert g.glob(os.path.join(quar, "_report_*.json"))
+
+
+def test_streaming_entry_leaves_no_temp_view(spark, sf_dir):
+    """A catalog streaming entry drops its memory-sink view; the frame it
+    returns still reads the drained rows."""
+    from aws_cli_data_pipeline_tools_spark.catalog import all_specs
+
+    def temp_views():
+        return sum(1 for t in spark.catalog.listTables() if t.isTemporary)
+
+    before = temp_views()
+    out = all_specs()["streaming_tumbling_live"].fn(spark, sf_dir)
+    assert temp_views() == before
+    want = (
+        load_table(spark, "events", sf_dir)
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .count()
+        .count()
+    )
+    assert out.count() == want > 0
