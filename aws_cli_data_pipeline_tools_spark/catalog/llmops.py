@@ -3,12 +3,12 @@ analysis, multimodal columns (SURVEY.md §7 step 6; BASELINE.json north_star).
 
 Oracle-checkable entries get full DuckDB SQL twins (inverted-index jaccard,
 cosine pairs/top-k, text stats, lang-id, fingerprints, canonical dedup).
-The MinHash/SimHash family runs in ``portable=True`` mode here (md5-derived
-60-bit hashes instead of xxhash64), so the full pipeline — shingle hashes,
-a·h+b mod p signatures, LSH bands, pigeonhole blocks, exact verification —
-is replayed as generated DuckDB SQL with the same seeded parameters; only
-genuinely sketch-valued entries (HLL, frequent-items, LSH/IVF ANN) remain
-rows-only with pytest/recall invariants.
+The MinHash/SimHash operators hash words and shingles with md5-derived
+60-bit hashes (``functions.portable_hash64``), so the full pipeline —
+shingle hashes, a·h+b mod p signatures, LSH bands, pigeonhole blocks, exact
+verification — is replayed as generated DuckDB SQL with the same seeded
+parameters; only genuinely sketch-valued entries (HLL, frequent-items,
+LSH/IVF ANN) remain rows-only with pytest/recall invariants.
 """
 
 from __future__ import annotations
@@ -426,10 +426,10 @@ def dedup_lines_c4(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# Portable-hash MinHash/SimHash oracles: the Spark side runs portable=True
-# (md5-derived hashes, functions.portable_hash64) and the DuckDB SQL below is
-# GENERATED with the same seeded (a_i, b_i) draw (functions.minhash_params),
-# replaying hash → signature → band → exact-verify arithmetic bit-for-bit.
+# MinHash/SimHash oracles: the Spark operators hash with md5-derived
+# functions.portable_hash64 and the DuckDB SQL below is GENERATED with the
+# same seeded (a_i, b_i) draw (functions.minhash_params), replaying
+# hash → signature → band → exact-verify arithmetic bit-for-bit.
 
 _DUCK_P = 2147483647  # functions.MINHASH_PRIME
 
@@ -508,9 +508,9 @@ SELECT * FROM scored WHERE jaccard >= 0.5 ORDER BY id_a, id_b
 """,
     tags=("llmops", "dedup"),
     notes="MinHash(64 perms) + LSH(32 bands × 2 rows) candidates, exact "
-    "Jaccard verified ≥ 0.5; portable md5-hash mode so the DuckDB oracle "
-    "replays signatures/banding with the identical seeded parameter draw. "
-    "Candidate recall at j=0.5 is 1-(1-0.5²)³² ≈ 0.9999.",
+    "Jaccard verified ≥ 0.5; md5-derived shingle hashes, so the DuckDB "
+    "oracle replays signatures/banding with the identical seeded parameter "
+    "draw. Candidate recall at j=0.5 is 1-(1-0.5²)³² ≈ 0.9999.",
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_pairs(
@@ -519,7 +519,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_perm=64,
         bands=32,
         threshold=0.5,
-        portable=True,
     )
 
 
@@ -575,13 +574,13 @@ ORDER BY id_a, id_b
     "dedup_simhash",
     oracle=_duck_simhash_sql(),
     tags=("llmops", "dedup"),
-    notes="SimHash (60 effective bits in portable md5-hash mode), Hamming "
+    notes="SimHash (60 effective bits: md5-derived word hashes), Hamming "
     "≤ 3 via pigeonhole 4-block join; oracle replays the per-bit vote and "
     "block arithmetic.",
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_pairs(
-        load_table(spark, "documents", sf_dir), max_hamming=3, portable=True
+        load_table(spark, "documents", sf_dir), max_hamming=3
     )
 
 
@@ -1196,7 +1195,7 @@ SELECT * FROM scored WHERE jaccard >= 0.5 ORDER BY corpus_id, batch_id
     "+ minhash_index_probe): 90% of documents become a persisted LSH index "
     "(docs + range-clustered band table); the remaining 10% probe it as a "
     "new batch — batch signatures broadcast against the band scan, corpus "
-    "never re-shingled or shuffled. Portable md5-hash mode; the oracle "
+    "never re-shingled or shuffled. md5-derived shingle hashes; the oracle "
     "replays the corpus/batch band join (16 bands × 4 rows) and exact "
     "verification with the same seeded parameters.",
 )
@@ -1223,8 +1222,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.path.abspath(sf_dir).encode("utf-8")
     ).hexdigest()[:8]
     path = scratch_dir(f"sparkgraft-mhidx-{sf_key}")
-    build_minhash_index(corpus, path, portable=True)
-    return minhash_index_probe(spark, path, batch, portable=True)
+    build_minhash_index(corpus, path)
+    return minhash_index_probe(spark, path, batch)
 
 
 @register(
@@ -4375,7 +4374,7 @@ FROM m
 """,
     tags=("llmops", "dedup", "stats"),
     notes="Dedup self-evaluation ('measure, don't guess'): MinHash+LSH "
-    "(64 perms × 32 bands, portable mode) candidate pairs scored against "
+    "(64 perms × 32 bands) candidate pairs scored against "
     "the EXACT 3-gram-Jaccard ≥ 0.5 truth set on the same shingle space "
     "— tp = candidate ∧ truth-member, fp = candidate ∉ truth, fn = truth "
     "∉ candidates (one consistent exact criterion; the signature-"
@@ -4390,7 +4389,7 @@ FROM m
 def dedup_minhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     cands = dedup.minhash_lsh_pairs(
-        docs, bands=32, threshold=0.0, portable=True
+        docs, bands=32, threshold=0.0
     ).select("id_a", "id_b", "jaccard")
     truth = dedup.ngram_jaccard_pairs(
         docs, k=3, threshold=0.5, max_bucket=0
@@ -4502,7 +4501,7 @@ WITH {_duck_simhash_ctes()}, scand AS (
     tags=("llmops", "dedup", "stats"),
     notes="SimHash self-evaluation (VERDICT r11 task 8, the "
     "dedup_minhash_recall_eval pattern): the verified Hamming ≤ 3 pair "
-    "set (portable mode, 4-block pigeonhole) scored against the EXACT "
+    "set (4-block pigeonhole) scored against the EXACT "
     "3-gram-Jaccard ≥ 0.5 truth on the uncapped inverted index — unlike "
     "minhash (a Jaccard estimator), simhash thresholds a DIFFERENT "
     "similarity (signature Hamming ≈ angular), so this report measures "
@@ -4514,7 +4513,7 @@ WITH {_duck_simhash_ctes()}, scand AS (
 )
 def dedup_simhash_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    cands = dedup.simhash_pairs(docs, max_hamming=3, portable=True).select(
+    cands = dedup.simhash_pairs(docs, max_hamming=3).select(
         "id_a", "id_b", "hamming"
     )
     truth = dedup.ngram_jaccard_pairs(

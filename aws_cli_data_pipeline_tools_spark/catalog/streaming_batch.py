@@ -227,7 +227,7 @@ def stateful_user_totals_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _duck_minhash_closure_sql() -> str:
     """DuckDB twin of dedup_cluster_groups (r13 graduation): the
     hash-for-hash MinHash+LSH pair replay that made dedup_minhash_lsh
-    exact (llmops._duck_minhash_sig_cte / _duck_band_cte, portable md5
+    exact (llmops._duck_minhash_sig_cte / _duck_band_cte, md5-derived
     hashes, rounded exact-Jaccard filter at 0.5), composed with the
     recursive-CTE transitive closure that made dedup_cluster_groups_exact
     exact. Both halves are single-sourced from the entries that proved
@@ -268,8 +268,8 @@ FROM reach GROUP BY src ORDER BY id
     tags=("streaming", "dedup"),
     notes="Connected components (label propagation) over MinHash near-dup "
     "pairs → (doc, group keeper) assignments. Graduated to a FULL DuckDB "
-    "oracle (r13): portable=True makes the MinHash+LSH pair graph "
-    "hash-replayable (the dedup_minhash_lsh construction) and the "
+    "oracle (r13): the md5-derived shingle hashes make the MinHash+LSH "
+    "pair graph hash-replayable (the dedup_minhash_lsh construction) and the "
     "closure replays via the dedup_cluster_groups_exact recursive CTE — "
     "so bucket assignment, the verified pair set, AND the distributed "
     "pointer-jumping fixpoint all hash-match. The retired invariant's "
@@ -281,8 +281,7 @@ def dedup_cluster_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     pairs = dd.minhash_lsh_pairs(
-        docs, k=3, num_perm=64, bands=32, threshold=0.5,
-        portable=True,  # md5-parity hashes — the DuckDB oracle's twin
+        docs, k=3, num_perm=64, bands=32, threshold=0.5
     )
     return dd.dedup_clusters(pairs)
 

@@ -73,8 +73,9 @@ def portable_hash64(col: Column) -> Column:
     ``CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT)`` — identical
     values, which is what lets MinHash/SimHash register real DuckDB oracles
     (same discipline as sampling.hash_bucket_expr). 15 hex chars = 60 bits
-    keeps the value positive in a signed long. ~2-3× the cost of xxhash64,
-    so the non-portable default stays xxhash64 on hot paths.
+    keeps the value positive in a signed long. It is the one word/shingle
+    hash of the MinHash and SimHash operators, so their results are
+    exactly what the DuckDB oracles replay; it costs ~2-3× xxhash64.
     """
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
@@ -88,19 +89,17 @@ def minhash_params(num_perm: int, seed: int) -> list[tuple[int, int]]:
     return [(rnd.randrange(1, p), rnd.randrange(0, p)) for _ in range(num_perm)]
 
 
-def shingle_hashes(shingles: Column, portable: bool = False) -> Column:
-    """Per-shingle int64 hash reduced mod MINHASH_PRIME — xxhash64 by
-    default, md5-derived (``portable_hash64``) when ``portable`` so a DuckDB
-    oracle can replay the arithmetic.
+def shingle_hashes(shingles: Column) -> Column:
+    """Per-shingle ``portable_hash64`` reduced mod MINHASH_PRIME, so a
+    DuckDB oracle can replay the arithmetic.
 
-    Materialize this as its OWN column before calling
-    ``minhash_signature_from_hashes``: lambda subtrees are not
-    common-subexpression-eliminated, so hashing inline inside each of the
-    num_perm transforms would re-hash every shingle string num_perm times.
+    Materialize this as its OWN column before computing signatures:
+    lambda subtrees are not common-subexpression-eliminated, so hashing
+    inline inside each of the num_perm transforms would re-hash every
+    shingle string num_perm times.
     """
-    h = portable_hash64 if portable else F.xxhash64
     return F.transform(
-        shingles, lambda s: F.pmod(h(s), F.lit(MINHASH_PRIME))
+        shingles, lambda s: F.pmod(portable_hash64(s), F.lit(MINHASH_PRIME))
     )
 
 
@@ -127,13 +126,6 @@ def minhash_signature_from_hashes(
     return F.when(F.size(hashes) > 0, sig).otherwise(
         F.array_repeat(F.lit(p), num_perm)
     )
-
-
-def minhash_signature(shingles: Column, num_perm: int = 64, seed: int = 1) -> Column:
-    """MinHash signature straight from a shingle-string array. Convenience
-    form — prefer materializing ``shingle_hashes`` in its own projection
-    first (see its docstring) on hot paths."""
-    return minhash_signature_from_hashes(shingle_hashes(shingles), num_perm, seed)
 
 
 def minhash_signatures_arrow(num_perm: int = 64, seed: int = 1):

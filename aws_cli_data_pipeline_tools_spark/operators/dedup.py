@@ -137,11 +137,13 @@ def ngram_jaccard_pairs(
     (df-count branch + both self-join sides) and exchange reuse does not
     fire across the anti-join, so by default it is persisted
     (MEMORY_AND_DISK) to shingle the corpus once instead of three times
-    (~25-30 % wall at sf0.1). Blocks are reclaimed by the ContextCleaner
-    once the result frame is garbage collected. Pass ``False`` on
-    cache-constrained clusters where recomputing the narrow
-    shingle+explode from the scan is cheaper than spilling an index that
-    is several times the corpus size.
+    (~25-30 % wall at sf0.1). Nothing releases it: the cached blocks stay
+    until the session ends or the caller unpersists them (measured: four
+    calls on distinct inputs leave four persistent RDDs, still four after
+    a Python and a JVM garbage collection). Pass ``False`` on
+    cache-constrained clusters or long-lived sessions where recomputing
+    the narrow shingle+explode from the scan is cheaper than spilling or
+    keeping an index that is several times the corpus size.
     """
     df = fan_out(df)
     def postings():
@@ -224,8 +226,8 @@ def ngram_jaccard_pairs(
                 # calls in a long-lived session accumulate cached
                 # distinct-shingle-sized frames (ADVICE r11). In every
                 # OTHER outcome dfc feeds the chosen path (plain's hot
-                # set or prefix's rarity sort) and its blocks are
-                # reclaimed by the ContextCleaner with the result.
+                # set or prefix's rarity sort) and stays persisted: no
+                # one releases it (ROADMAP direction 5).
                 dfc.unpersist()
                 dfc = None
     if prefix_filter:
@@ -406,7 +408,6 @@ def minhash_sides(
     k: int = 3,
     num_perm: int = 64,
     seed: int = 1,
-    portable: bool = False,
 ) -> DataFrame:
     """Per-document (id, shingle-hash set, MinHash signature) frame — the
     shared front half of LSH pair generation and the persisted index.
@@ -420,9 +421,9 @@ def minhash_sides(
     dropped (they can never be near-dups; keeping them would bucket every
     empty doc together on the sentinel signature).
 
-    ``portable=True`` swaps xxhash64 shingle hashing for the md5-derived
-    ``portable_hash64`` so the whole pipeline (hashes → signatures → bands →
-    exact Jaccard) is replayable as DuckDB SQL — the oracle-checked mode.
+    Shingles are hashed with the md5-derived ``portable_hash64``, so the
+    whole pipeline (hashes → signatures → bands → exact Jaccard) is
+    replayable as DuckDB SQL (the ``dedup_minhash_lsh`` oracle).
 
     fan_out before the kernel (r14, revisiting the r13 "neutral" A/B
     with stage evidence in hand): the fixture parquet is one row group,
@@ -437,7 +438,7 @@ def minhash_sides(
     shingled = fan_out(df).select(
         F.col(id_col).alias("id"),
         F.array_distinct(
-            shingle_hashes(word_shingles(F.col(text_col), k), portable=portable)
+            shingle_hashes(word_shingles(F.col(text_col), k))
         ).alias("hsh"),
     )
     return (
@@ -487,13 +488,12 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    verify_exact: bool = True,
     seed: int = 1,
-    portable: bool = False,
 ) -> DataFrame:
-    """MinHash + LSH banding candidate pairs, optionally exact-verified.
+    """MinHash + LSH banding candidate pairs, exact-verified.
 
-    - signature: per-row array math (``minhash_signature``), no shuffle;
+    - signature: map-side Arrow UDF over the shingle hashes
+      (``minhash_sides``), no shuffle;
     - banding: explode ``bands`` rows per doc keyed by
       (band_idx, xxhash64(band slice)) — same band+key → candidate bucket;
     - candidates: within-bucket pairs (distinct across bands);
@@ -502,11 +502,11 @@ def minhash_lsh_pairs(
       explode), filtered at ``threshold``.
 
     At scale: shuffle volume is bands × docs rows of (key, id) — a constant
-    factor over the corpus, the canonical trade against O(n²). Estimated-only
-    mode (``verify_exact=False``) returns banding candidates with the
-    signature-agreement estimate.
+    factor over the corpus, the canonical trade against O(n²). Returns
+    (id_a, id_b, est_jaccard, jaccard ≥ threshold): ``est_jaccard`` is the
+    signature-agreement estimate, ``jaccard`` the exact shingle Jaccard.
     """
-    sides = minhash_sides(df, id_col, text_col, k, num_perm, seed, portable)
+    sides = minhash_sides(df, id_col, text_col, k, num_perm, seed)
     band_entries = minhash_band_entries(sides, num_perm, bands)
     # Volume-adaptive banding exchange (VERDICT r8 task 3): the banding
     # self-join shuffles ~bands × 56 B per doc (28 B serialized (band,
@@ -550,9 +550,7 @@ def minhash_lsh_pairs(
     est = (
         F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
         / F.lit(float(num_perm))
-    ).alias("est_jaccard")
-    if not verify_exact:
-        return joined.select("id_a", "id_b", est).orderBy("id_a", "id_b")
+    )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
     return (
@@ -579,7 +577,6 @@ def build_minhash_index(
     bands: int = 16,
     seed: int = 1,
     n_files: int = 8,
-    portable: bool = False,
 ) -> None:
     """Persist a MinHash-LSH dedup index for incremental ingestion: the
     per-doc frame (``docs/``: id, shingle-hash set, signature) plus the
@@ -590,7 +587,7 @@ def build_minhash_index(
     :func:`minhash_index_probe` without re-shingling or self-joining the
     corpus — the 100 TB ingestion pattern (the IVF analog for text).
     """
-    sides = minhash_sides(df, id_col, text_col, k, num_perm, seed, portable)
+    sides = minhash_sides(df, id_col, text_col, k, num_perm, seed)
     sides.write.mode("overwrite").parquet(f"{path}/docs")
     (
         minhash_band_entries(sides, num_perm, bands)
@@ -612,7 +609,6 @@ def minhash_index_probe(
     bands: int = 16,
     threshold: float = 0.5,
     seed: int = 1,
-    portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs between a new ``batch`` and an indexed corpus
     (:func:`build_minhash_index` with the SAME k/num_perm/bands/seed).
@@ -624,7 +620,7 @@ def minhash_index_probe(
     (corpus_id, batch_id, est_jaccard, jaccard ≥ threshold), exact-verified
     on the stored shingle-hash sets.
     """
-    batch_sides = minhash_sides(batch, id_col, text_col, k, num_perm, seed, portable)
+    batch_sides = minhash_sides(batch, id_col, text_col, k, num_perm, seed)
     batch_bands = minhash_band_entries(batch_sides, num_perm, bands)
 
     idx_bands = spark.read.parquet(f"{path}/bands")
@@ -711,7 +707,6 @@ def simhash_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    portable: bool = False,
     n_blocks: "int | None | str" = "auto",
 ) -> DataFrame:
     """SimHash near-dup pairs within a Hamming ball of ``max_hamming``.
@@ -737,10 +732,12 @@ def simhash_pairs(
     candidate (equal tuples always hash equal), and every candidate is
     exact-verified, so the output set is identical.
 
-    ``portable=True`` hashes words with the 60-bit md5-derived
-    ``portable_hash64`` instead of xxhash64 (bits 60-63 of the signature
-    are then constantly 0 — harmless for both pigeonhole completeness and
-    Hamming distances), making the operator DuckDB-oracle-replayable.
+    Words are hashed with the 60-bit md5-derived ``portable_hash64``, so
+    the operator is DuckDB-oracle-replayable (the ``dedup_simhash``
+    oracle). The signature therefore has 60 live bits: bits 60-63 are
+    constantly 0, so two signatures never differ there. Both blocking
+    modes stay lossless: a pair within distance d differs in at most d
+    blocks, whether or not a block holds dead bits.
 
     ``n_blocks="auto"`` (the r11 default — the README playbook row was
     a manual knob with a documented ~10-15M-doc crossover, the same
@@ -797,15 +794,14 @@ def simhash_pairs(
         n_blocks = max_hamming + 1
     width = 64 // n_blocks
     # Signature via explode + hash-aggregate (64 conditional sums) rather
-    # than the scalar simhash64 fold: the aggregate form is codegen-friendly
+    # than a scalar per-row fold: the aggregate form is codegen-friendly
     # and map-side combined — per-word rows never cross the wire, only
-    # (id, 64 ints) partials do. Same result, ~10× faster.
+    # (id, 64 ints) partials do (~10× faster).
     masks = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
-    word_hash = portable_hash64 if portable else F.xxhash64
     words = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_remove(F.split(F.col(text_col), r"\s+"), "")).alias("w"),
-    ).withColumn("h", word_hash(F.col("w"))).drop("w")
+    ).withColumn("h", portable_hash64(F.col("w"))).drop("w")
     votes = words.groupBy("id").agg(
         *[
             F.sum(
@@ -1277,8 +1273,9 @@ def _cosine_pairs_matmul(
     """Exact all-pairs cosine ≥ threshold: broadcast normalized corpus matrix
     + per-partition BLAS block matmul. Emits (id_a, id_b, cosine) with
     id_a < id_b, cosine rounded to 6. Only for corpora that fit a driver
-    broadcast — kept as the oracle baseline / small-corpus fast path; the
-    engine default is the distributed ``_cosine_pairs_blocked``."""
+    broadcast — kept as the reference that ``_cosine_pairs_blocked`` (what
+    ``embedding_cosine_pairs`` runs) is tested against: both produce
+    identical values (same numpy normalization/round path)."""
     import numpy as np
     import pandas as pd
 
@@ -1321,7 +1318,6 @@ def embedding_cosine_pairs(
     seed: int = 7,
     n_blocks: int | None = None,
     dim: int | None = None,
-    broadcast: bool = False,
 ) -> DataFrame:
     """Embedding near-dup pairs with cosine ≥ threshold.
 
@@ -1332,10 +1328,6 @@ def embedding_cosine_pairs(
     matrix stays bounded (see ``_cosine_auto_blocks`` — the r12 spill
     audit found the old fixed 8 fatal at 200k vectors); pass an int to
     pin it.
-    ``broadcast=True`` opts into the single-broadcast variant
-    (``_cosine_pairs_matmul``) for corpora known to fit a broadcast
-    (~1M×64 floats = 256 MB); both produce identical values (same numpy
-    normalization/round path).
 
     ``n_planes > 0``: random-hyperplane LSH — bucket by the sign-bit
     signature, pair only within buckets (near-identical vectors collide
@@ -1355,8 +1347,6 @@ def embedding_cosine_pairs(
     """
     df = df.filter(F.col(vec_col).isNotNull())
     if not n_planes:
-        if broadcast:
-            return _cosine_pairs_matmul(df, id_col, vec_col, threshold)
         return _cosine_pairs_blocked(
             df, id_col, vec_col, threshold, n_blocks=n_blocks
         )
@@ -1849,7 +1839,6 @@ def shared_span_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     span: int = 32,
-    portable: bool = False,
     max_postings: int = 0,
     rolling: bool = False,
 ) -> DataFrame:
@@ -1869,16 +1858,15 @@ def shared_span_pairs(
     as :func:`ngram_jaccard_pairs` — boilerplate banners otherwise create
     quadratic pair blow-up; dropped windows are the corpus-wide-common
     ones, which are boilerplate by construction, not memorization spans.
-    ``portable=True`` uses the md5-derived 60-bit hash so a DuckDB oracle
-    replays the pipeline hash-for-hash. ``rolling=True`` switches posting
-    generation to the O(len) Arrow-batched rolling-hash kernel
-    (:func:`_rolling_span_postings`) — same output pairs/counts (hash
-    values are internal; the oracle compares pair counts against exact
-    raw substrings), 32× less hash work and one less shuffle (the kernel
-    emits per-doc-unique postings, so no global DISTINCT). Mutually
-    exclusive with ``portable``. (No fan_out: the kernel's own
-    volume-adaptive posting exchange already widens the heavy phase —
-    an up-front repartition measured NEGATIVE at sf0.1, r13.)
+    Window hashes are internal: the oracle compares pair counts against
+    exact raw substrings. ``rolling=True`` switches posting generation
+    from the JVM xxhash64 windows to the O(len) Arrow-batched rolling-hash
+    kernel (:func:`_rolling_span_postings`) — same output pairs/counts,
+    32× less hash work and one less shuffle (the kernel emits
+    per-doc-unique postings, so no global DISTINCT). (No fan_out: the
+    kernel's own volume-adaptive posting exchange already widens the
+    heavy phase — an up-front repartition measured NEGATIVE at sf0.1,
+    r13.)
     """
     # Volume-adaptive posting partitioning (VERDICT r8 task 3): one
     # (id, g) row per character — at 100× the sf0.1 cipher fixture that
@@ -1897,8 +1885,6 @@ def shared_span_pairs(
     # actions — see _span_posting_width.
     width = _span_posting_width(df, text_col)
     if rolling:
-        if portable:
-            raise ValueError("rolling and portable are mutually exclusive")
         # Still no fan_out (r14, re-measured with stage evidence): the
         # single-row-group fixture pins the rolling-hash kernel to ONE
         # task and the posting subtree materializes under FOUR concurrent
@@ -1919,12 +1905,11 @@ def shared_span_pairs(
             posting = posting.repartition(width, "g")
     else:
         t = F.col(text_col)
-        hashfn = portable_hash64 if portable else F.xxhash64
         grams = F.when(
             F.length(t) >= span,
             F.transform(
                 F.sequence(F.lit(1), F.length(t) - (span - 1)),
-                lambda i: hashfn(t.substr(i, F.lit(span))),
+                lambda i: F.xxhash64(t.substr(i, F.lit(span))),
             ),
         ).otherwise(F.array().cast("array<bigint>"))
         posting = df.select(

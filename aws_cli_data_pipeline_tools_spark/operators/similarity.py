@@ -1257,7 +1257,6 @@ def jl_sign_buckets(
     vec_col: str = "embedding",
     seed: str = "jl-v1",
     dim: int | None = None,
-    validate_dim: bool = True,
 ) -> DataFrame:
     """Sign-bit bucket of the fixed-point JL projection: ``bucket =
     Σ_j (s_j >= 0) << j`` over the first ``n_bits`` projected dimensions
@@ -1270,7 +1269,8 @@ def jl_sign_buckets(
     bucket is a fixed ``+`` chain — no explode, no shuffle, output is
     (input columns…, bucket). Signs/micro-units replicate
     random_projection exactly (md5-parity signs, bigint sums), so a
-    DuckDB oracle replays the bucketing hash-for-hash.
+    DuckDB oracle replays the bucketing hash-for-hash. A given ``dim``
+    is checked against the first row's vector length (one job).
     """
     lit_signs = (
         _md5_parity_signs(seed, dim, n_bits) if dim is not None else None
@@ -1290,7 +1290,7 @@ def jl_sign_buckets(
         term = F.when(micro(j) >= 0, F.lit(1 << j)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
     bucket = bucket.cast("bigint")
-    if dim is not None and validate_dim:
+    if dim is not None:
         # eager first-row width check (r9 review): with a mismatched
         # `dim` the zip_with pads the literal sign array with NULLs, the
         # NULL poisons every micro sum, and EVERY row silently lands in
@@ -1302,8 +1302,8 @@ def jl_sign_buckets(
         # the wrapping and additive forms. The eager check is one
         # first-row job (the mmr limit(2) precedent) and catches the
         # realistic bug class — a wrong `dim` literal against a
-        # uniform-width corpus; per-row enforcement of mixed-width
-        # corruption is the caller's trade via validate_dim.
+        # uniform-width corpus; mixed-width corruption past the first
+        # row is not caught.
         row = df.select(F.size(F.col(vec_col)).alias("n")).first()
         if row is not None and row["n"] is not None and row["n"] != dim:
             raise ValueError(

@@ -527,7 +527,6 @@ def tfidf_top_terms(
     text_col: str = "text",
     top_n: int = 5,
     min_df: int = 1,
-    persist_tf: bool = False,
 ) -> DataFrame:
     """Top-``top_n`` TF-IDF terms per document.
 
@@ -543,8 +542,8 @@ def tfidf_top_terms(
     The corpus count N is a scalar literal-free cross join of a 1-row agg —
     no driver action, no collect.
 
-    ``persist_tf``: the (doc, token, tf) aggregate feeds both the df
-    aggregate and the scoring join. The scoring join uses a NULL-SAFE
+    The (doc, token, tf) aggregate feeds both the df aggregate and the
+    scoring join, and is not cached. The scoring join uses a NULL-SAFE
     key (r13 optimization round): the plain equi-join derived
     isnotnull(token) Filters (InferFiltersFromConstraints) into both tf
     subtrees — re-evaluating the tokenize+explode under extra Filter
@@ -556,9 +555,7 @@ def tfidf_top_terms(
     ADVICE r13; AQE may still reuse the materialized stage at runtime,
     which the plan text cannot show). Result-identical: token comes
     from an explode of regexp matches (never NULL) on both sides, so
-    null-matching semantics are moot. ``persist_tf`` remains for
-    remote/expensive scans where even one tokenize pass should be
-    traded for cache IO.
+    null-matching semantics are moot.
     """
     # no fan_out here: measured NEGATIVE at sf0.1 (tokenize+explode is
     # cheap relative to the extra exchange both tf consumers then pay)
@@ -569,10 +566,6 @@ def tfidf_top_terms(
         ).alias("token"),
     )
     tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
-    if persist_tf:
-        from pyspark import StorageLevel
-
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df")).select(
         F.col("token").alias("__dftoken"), "df"
     )

@@ -10,7 +10,7 @@ with no text-length change.
 
 Measured shapes:
 - ``minhash_lsh_pairs`` over the N× corpus (the dedup_minhash_lsh
-  catalog operating point: k=3, 64 perms, 32 bands, t=0.5, portable).
+  catalog operating point: k=3, 64 perms, 32 bands, t=0.5).
   Expectation: map-side Arrow signatures are linear; the band shuffle is
   O(bands × docs); candidate verification linear in true pairs.
 - ``decontaminate`` / ``bloom_decontaminate`` with the TRAIN side scaled
@@ -70,8 +70,7 @@ def main() -> int:
     # warmup: JVM + Arrow worker pool on ALL timed kernels (bloom too —
     # its first call pays one-time broadcast-build codegen, r8 review)
     dedup.minhash_lsh_pairs(
-        docs.limit(300), k=3, num_perm=64, bands=32, threshold=0.5,
-        portable=True,
+        docs.limit(300), k=3, num_perm=64, bands=32, threshold=0.5
     ).count()
     curation.decontaminate(docs.limit(300), ev.limit(100), n=5).count()
     curation.bloom_decontaminate(docs.limit(300), ev.limit(100), n=5).count()
@@ -85,7 +84,7 @@ def main() -> int:
         t_mh[mult] = timed(
             f"minhash_lsh      {mult}x",
             lambda c=corpus: dedup.minhash_lsh_pairs(
-                c, k=3, num_perm=64, bands=32, threshold=0.5, portable=True
+                c, k=3, num_perm=64, bands=32, threshold=0.5
             ).count(),
             repeat=2,
         )
@@ -138,8 +137,8 @@ def _index_probe_curve(spark, docs, mults) -> None:
     batch = materialize(docs.limit(500))
     # warm both kernels (build once at tiny scale, probe it once)
     wpath = f"{root}/warm"
-    dedup.build_minhash_index(docs.limit(300), wpath, portable=True)
-    dedup.minhash_index_probe(spark, wpath, batch, portable=True).count()
+    dedup.build_minhash_index(docs.limit(300), wpath)
+    dedup.minhash_index_probe(spark, wpath, batch).count()
 
     t_build: dict[int, float] = {}
     t_probe: dict[int, float] = {}
@@ -148,14 +147,12 @@ def _index_probe_curve(spark, docs, mults) -> None:
         path = f"{root}/m{mult}"
         t_build[mult] = timed(
             f"index build {mult}x",
-            lambda c=corpus, p=path: dedup.build_minhash_index(
-                c, p, portable=True
-            ),
+            lambda c=corpus, p=path: dedup.build_minhash_index(c, p),
         )
         t_probe[mult] = timed(
             f"index probe {mult}x (fixed 500-doc batch)",
             lambda p=path: dedup.minhash_index_probe(
-                spark, p, batch, portable=True
+                spark, p, batch
             ).count(),
             repeat=2,
         )
