@@ -184,39 +184,6 @@ def minhash_signatures_arrow(num_perm: int = 64, seed: int = 1):
     return pandas_udf(sig, "array<bigint>", functionType=PandasUDFType.SCALAR)
 
 
-def simhash64(words: Column) -> Column:
-    """64-bit SimHash of a token array, as a bigint.
-
-    Per-bit weighted vote: for each of 64 bit positions, sum (+1/-1) over
-    token hashes; bit set if the sum is positive. The fold keeps a 64-long
-    vote array (zip_with accumulate), then packs bits into one bigint —
-    entirely built-in expressions. Bit masks are Python-side literals
-    (shift amounts cannot be Columns); bit 63's mask is the sign bit.
-    """
-    masks = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
-    zero = F.array_repeat(F.lit(0), 64)
-
-    def vote(acc: Column, w: Column) -> Column:
-        h = F.xxhash64(w)
-        bits = F.array(
-            *[
-                F.when(h.bitwiseAND(F.lit(m)) != 0, 1).otherwise(-1)
-                for m in masks
-            ]
-        )
-        return F.zip_with(acc, bits, lambda a, b: a + b)
-
-    votes = F.aggregate(words, zero, vote)
-    packed = F.lit(0).cast("bigint")
-    for i, m in enumerate(masks):
-        packed = packed.bitwiseOR(
-            F.when(F.element_at(votes, i + 1) > 0, F.lit(m).cast("bigint")).otherwise(
-                F.lit(0).cast("bigint")
-            )
-        )
-    return packed
-
-
 def hamming64(a: Column, b: Column) -> Column:
     """Hamming distance between two 64-bit signatures (bigints)."""
     return F.bit_count(a.bitwiseXOR(b))

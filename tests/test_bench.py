@@ -1,6 +1,5 @@
-"""bench.py's host-stability gates: the probe-normalized whole-pass band
-gate, the multi-thread capacity probe, and the contention rule. No Spark
-session is needed."""
+"""bench.py's measurement protocol on a fake clock: PASSES rotated passes,
+each query reported as its median. No Spark session is needed."""
 
 import os
 import sys
@@ -11,103 +10,90 @@ sys.path.insert(0, repo)
 import bench  # noqa: E402
 
 
-def test_band_ratio_arithmetic():
-    bands = {"a": (1.0, 0.010), "b": (2.0, 0.020)}
-    # same-probe host: ratio is plain actual/expected over banded queries;
-    # the band-less query ("new") must not enter either side
-    r = bench._band_ratio({"a": 1.5, "b": 1.5, "new": 99.0}, bands, 0.010)
-    # expected = 1.0×1.0 + 2.0×clamp(0.010/0.020)=2.0×0.5 → 2.0; actual 3.0
-    assert r == 1.5, r
-    # uniformly 2×-slower probe rescales the expectation, not the verdict
-    r_slow = bench._band_ratio({"a": 2.0}, {"a": (1.0, 0.010)}, 0.020)
-    assert r_slow == 1.0, r_slow
-    # clamp: a 10× probe swing contributes at most the clamp bound
-    lo, hi = bench.PROBE_RATIO_CLAMP
-    r_clamped = bench._band_ratio({"a": 1.0}, {"a": (1.0, 0.010)}, 0.100)
-    assert r_clamped == round(1.0 / hi, 3), r_clamped
-    # no bands → no ratio (never gates a first-ever recording)
-    assert bench._band_ratio({"a": 1.0}, {}, 0.010) is None
-    assert bench._band_ratio({}, {"a": (1.0, 0.01)}, 0.010) is None
-    # unknown probe on either side → unscaled comparison, still a ratio
-    assert bench._band_ratio({"a": 2.0}, {"a": (1.0, None)}, 0.010) == 2.0
+def _fake_runners(costs):
+    """Runners on a fake clock: the i-th call of ``name`` advances the
+    clock by ``costs[name][i]``. Returns (runners, clock, call order)."""
+    now = [0.0]
+    order = []
+    left = {name: iter(secs) for name, secs in costs.items()}
+
+    def runner(name):
+        def run():
+            order.append(name)
+            now[0] += next(left[name])
+
+        return run
+
+    return {name: runner(name) for name in costs}, (lambda: now[0]), order
 
 
-def test_suite_gate_catches_stable_slow_window():
-    """The r13 wound, replayed: single-thread probes stable, not
-    contended — but the pass read well above its bands. The r14 gate
-    must flag it; the same pass at clean-window cost must not re-run."""
-    stable = dict(cpu_probe=0.016, cpu_probe_end=0.017, contended=False)
-    # formally stable + slow vs bands → unstable (re-run)
-    assert bench._suite_attempt_unstable(
-        band_ratio=bench.SUITE_BAND_GATE + 0.01, **stable
+def test_passes_rotate_start_offset():
+    from aws_cli_data_pipeline_tools_spark.catalog import all_specs
+
+    # every headline query resolves in the registry
+    missing = [q for q in bench.HEADLINE if q not in all_specs()]
+    assert not missing, missing
+
+    names = list(bench.HEADLINE) + list(bench.BENCH_ONLY)
+    n = len(names)
+    runners, clock, order = _fake_runners(
+        {name: [1.0] * bench.PASSES for name in names}
     )
-    # formally stable + fast vs bands → stable (report it)
-    assert not bench._suite_attempt_unstable(
-        band_ratio=bench.SUITE_BAND_GATE - 0.01, **stable
+    passes = bench._run_passes(runners, clock)
+    assert bench.PASSES == 3 and len(passes) == bench.PASSES
+    runs = [order[i * n:(i + 1) * n] for i in range(bench.PASSES)]
+    # pass 1 is list order; every pass runs every runner exactly once
+    assert runs[0] == names
+    assert all(sorted(r) == sorted(names) for r in runs)
+    # each pass starts the same cyclic list at a different offset
+    starts = [names.index(r[0]) for r in runs]
+    assert len(set(starts)) == bench.PASSES, starts
+    for r, k in zip(runs, starts):
+        assert r == names[k:] + names[:k]
+    # the index build precedes the probe that reads it
+    assert runs[0].index("ann_ivf_index_build") < runs[0].index(
+        "ann_ivf_index_probe"
     )
-    # no bands at all (fresh sf) → the old rules alone decide
-    assert not bench._suite_attempt_unstable(band_ratio=None, **stable)
-    # multi-thread capacity collapse mid-run → unstable even with the
-    # single-thread pair and the band ratio both green
-    assert bench._suite_attempt_unstable(
-        band_ratio=0.8, mt_probe=0.05,
-        mt_probe_end=0.05 * (bench.RERUN_DIVERGENCE + 0.05), **stable
-    )
-    assert not bench._suite_attempt_unstable(
-        band_ratio=0.8, mt_probe=0.05, mt_probe_end=0.055, **stable
-    )
-    # gate calibration sanity: a clean pass of the current tree reads
-    # ~0.8× its trailing bands, so the gate must leave real headroom
-    # above 1.0 while still catching the measured ~1.3-1.4× degradation
-    # scaled by that improvement (≈ 1.04-1.12)
-    assert 1.0 < bench.SUITE_BAND_GATE < 1.15
+    # the sidecar's timings are in run order
+    assert [list(p["timings"]) for p in passes] == runs
 
 
-def test_mt_probe_runs_and_headline_carries_new_scalars():
-    mt = bench._mt_probe()
-    assert isinstance(mt, float) and mt > 0
-    rec = bench._headline_record(
-        {"q": 1.0}, 1.0, 0.1, 1.0, 0.016, 0.016, 1.0, 0, False,
-        mt_probe=0.05, mt_probe_end=0.06, band_ratio=0.81,
+def test_headline_reports_per_query_median():
+    runners, clock, _ = _fake_runners(
+        {"a": [1.0, 5.0, 2.0], "b": [3.0, 1.0, 9.0], "c": [2.0, 2.0, 2.0]}
     )
-    assert rec["mt_probe_sec"] == 0.05
-    assert rec["mt_probe_sec_end"] == 0.06
-    assert rec["band_ratio"] == 0.81
-    # defaulted (unavailable) values stay bounded scalars
-    rec2 = bench._headline_record(
-        {"q": 1.0}, 1.0, 0.1, 1.0, 0.016, 0.016, 1.0, 0, False
+    passes = bench._run_passes(runners, clock)
+    assert [p["total"] for p in passes] == [6.0, 8.0, 13.0]
+    rec = bench._headline_record(passes, 0.1, 1.0, 0.016, 0.017, 0.2)
+    assert rec["queries"] == {"a": 2.0, "b": 3.0, "c": 2.0}
+    assert rec["value"] == 7.0
+    assert rec["value_first_pass"] == 6.0
+    assert rec["suite_unstable"] is True  # 13 / 6 > UNSTABLE_PASS_RATIO
+    assert rec["contended"] is False
+    assert (rec["n_suite_attempts"], rec["suite_attempt"]) == (3, 0)
+    assert rec["n_retries"] == 0
+    assert rec["idle_gate_loads"].count(",") == bench.PASSES - 1
+    assert rec["attempt_probes"] == "0.016:0.017"
+    assert rec["mt_probe_sec"] == rec["mt_probe_sec_end"] == -1.0
+    assert rec["band_ratio"] == -1.0
+    assert set(rec) == {
+        "metric", "value", "value_first_pass", "unit", "queries", "sf",
+        "load_avg_t0", "cpu_probe_sec", "cpu_probe_sec_end",
+        "probe_divergent", "load_avg_start", "load_avg_end", "n_retries",
+        "contended", "idle_gate_loads", "suite_attempt", "suite_unstable",
+        "n_suite_attempts", "attempt_probes", "steal_pct", "mt_probe_sec",
+        "mt_probe_sec_end", "band_ratio",
+    }
+    # telemetry labels the run; it never changes the reported timings
+    busy = bench._headline_record(passes, 0.1, 9.0, 0.016, 0.9, 7.5)
+    assert busy["contended"] is True and busy["probe_divergent"] is True
+    assert (busy["queries"], busy["value"], busy["value_first_pass"]) == (
+        rec["queries"], rec["value"], rec["value_first_pass"]
     )
-    assert rec2["mt_probe_sec"] == -1.0
-    assert rec2["band_ratio"] == -1.0
-
-
-def test_attempt_contended_needs_external_evidence_for_end_load():
-    """r14 refinement: the suite's own 32-way execution raises the
-    1-minute end-load past RETRY_LOAD on every honest full-throughput
-    pass — end-load alone must NOT flag contention; external evidence
-    (steal, probe divergence) must corroborate. Idle-gated start-load
-    still flags unconditionally."""
-    clean = dict(
-        steal_pct=0.13, cpu_probe=0.0146, cpu_probe_end=0.0152,
-        mt_probe=0.059, mt_probe_end=0.059,
+    # passes within UNSTABLE_PASS_RATIO of each other: stable
+    runners, clock, _ = _fake_runners({"a": [1.0, 1.2, 1.1]})
+    steady = bench._headline_record(
+        bench._run_passes(runners, clock), 0.1, 1.0, 0.016, 0.016, None
     )
-    # self-load only (the observed false positive): NOT contended
-    assert not bench._attempt_contended(1.98, 5.74, **clean)
-    # same end-load but steal corroborates: contended
-    assert bench._attempt_contended(
-        1.98, 5.74, 2.26, 0.0146, 0.0152, 0.059, 0.059
-    )
-    # same end-load but a probe pair diverges: contended
-    assert bench._attempt_contended(
-        1.98, 5.74, 0.13, 0.016, 0.016 * (bench.RERUN_DIVERGENCE + 0.05),
-        0.059, 0.059,
-    )
-    # external load already present at (idle-gated) start: contended
-    assert bench._attempt_contended(bench.RETRY_LOAD + 0.1, 1.0, **clean)
-    # quiet box end to end: not contended
-    assert not bench._attempt_contended(0.3, 2.0, **clean)
-    # unknown steal (no /proc/stat) + elevated end-load + flat probes:
-    # not contended — the probe pairs are the remaining arbiter
-    assert not bench._attempt_contended(
-        1.0, 6.0, None, 0.0146, 0.0152, 0.059, 0.059
-    )
+    assert steady["suite_unstable"] is False
+    assert steady["steal_pct"] == -1.0 and steady["contended"] is False

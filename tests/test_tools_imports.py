@@ -2,8 +2,10 @@
 ``perfbench/*.py`` import exists, and every keyword argument those scripts
 pass to an imported package callable is a parameter of it, so deleting a
 library name or parameter cannot leave a script broken until someone runs
-it. Imports only the package modules the scripts name; no Spark session
-starts."""
+it. The same holds for the repo-root script modules the scripts import
+(``bench``, ``bench_scale``): every name imported from them and every
+``bench.<attr>`` read must be defined there. Imports only the package
+modules the scripts name; no Spark session starts."""
 
 import ast
 import importlib
@@ -12,6 +14,11 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "aws_cli_data_pipeline_tools_spark"
+#: Script modules that other scripts import by bare name.
+SCRIPT_MODULES = {
+    "bench": REPO / "bench.py",
+    "bench_scale": REPO / "tools" / "bench_scale.py",
+}
 
 
 def _scripts():
@@ -128,3 +135,59 @@ def test_tool_keyword_arguments_exist():
                     stale.append(f"{where}: {'.'.join(parts)}({kw.arg}=)")
     assert checked > 0
     assert not stale, "keyword arguments the callee lacks:\n" + "\n".join(stale)
+
+
+def _top_level_names(path: Path) -> set[str]:
+    """Names a module binds at top level: defs, classes, assignments
+    and imports. Read from the source, so the module is not executed."""
+    names = set()
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            for alias in node.names:
+                names.add((alias.asname or alias.name).split(".")[0])
+    return names
+
+
+def test_script_module_names_exist():
+    """``from bench import x`` / ``from bench_scale import x`` and
+    ``bench.x`` (after ``import bench``) in any script name something the
+    module defines."""
+    defined = {m: _top_level_names(p) for m, p in SCRIPT_MODULES.items()}
+    checked, missing = 0, []
+    for script in _scripts():
+        tree = ast.parse(script.read_text(), str(script))
+        local = {}  # local name -> script module, from ``import bench``
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module in defined:
+                for alias in node.names:
+                    checked += 1
+                    if alias.name not in defined[node.module]:
+                        missing.append(
+                            f"{script.relative_to(REPO)}:{node.lineno}: "
+                            f"from {node.module} import {alias.name}"
+                        )
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name in defined:
+                        local[alias.asname or alias.name] = alias.name
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in local
+            ):
+                module = local[node.value.id]
+                checked += 1
+                if node.attr not in defined[module]:
+                    missing.append(
+                        f"{script.relative_to(REPO)}:{node.lineno}: "
+                        f"{module}.{node.attr}"
+                    )
+    assert checked > 0
+    assert not missing, "names the script module lacks:\n" + "\n".join(missing)

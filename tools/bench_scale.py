@@ -9,7 +9,8 @@ times each cell min-of-``--repeat`` at the SHIPPED operating point
 (auto modes as registered, widths on), stamps the bench CPU-probe pair
 around the run, band-checks every cell against the best probe-normalized
 prior recording (BENCH_SCALE_r*.json, same corpus key), and emits
-``BENCH_SCALE_r{N}.json``.
+``BENCH_SCALE_r{N}.json``. The corpus key carries the core count, so a
+band recorded on one core count never judges a run on another.
 
 Protocol notes:
 - fixture/measurement come from tools/_stress_common.py (cipher
@@ -18,7 +19,7 @@ Protocol notes:
   same way);
 - cells run on the sf0.1 documents base at ``--mult 100`` — 500k docs,
   the same firing scale the r11 spill audit closed at;
-- the band rule mirrors bench.py: a cell is flagged when
+- a cell is flagged when
   ``sec > BAND_FACTOR × best_sec × clamp(probe_now / best_probe)``;
   violations are reported in the artifact, never silently dropped;
 - like bench.py, the FINAL stdout line is the one-line JSON record
@@ -47,7 +48,10 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
 
-#: Same retry-band factor and probe clamp as bench.py's per-query rule.
+#: Band factor, and the clamp on the probe ratio that rescales a band to
+#: the current host: the matmul probe itself varied ~1.7× within a day on
+#: the recorded hosts (BASELINE.md r8 notes), so an unclamped ratio would
+#: let probe noise move the threshold arbitrarily.
 BAND_FACTOR = 1.3
 PROBE_RATIO_CLAMP = (0.5, 2.0)
 
@@ -68,7 +72,7 @@ def _recorded_scale_bands(
 ) -> dict[str, tuple[float, float]]:
     """Best probe-normalized (sec, probe) per cell across prior
     BENCH_SCALE_r*.json artifacts with the SAME corpus key. Divergent-
-    probe rounds are excluded (the bench.py band rule)."""
+    probe rounds are excluded."""
     bands: dict[str, tuple[float, float]] = {}
     best_cost: dict[str, float] = {}
     for path in glob.glob(os.path.join(search_dir, "BENCH_SCALE_r*.json")):
@@ -89,6 +93,12 @@ def _recorded_scale_bands(
                 best_cost[name] = cost
                 bands[name] = (float(sec), float(probe))
     return bands
+
+
+def _corpus_key(sf_dir: str, mult: int, cores: int) -> str:
+    """Band key of a run: scale-factor dir name, replication factor and
+    core count, e.g. ``sf0.1|100x|c4``."""
+    return f"{os.path.basename(os.path.normpath(sf_dir))}|{mult}x|c{cores}"
 
 
 def _positional_args(argv: list[str]) -> list[str]:
@@ -175,7 +185,7 @@ def main() -> int:
 
     corpus = materialize(cipher_replicated(docs, mult))
     n_docs = corpus.count()
-    corpus_key = f"{os.path.basename(os.path.normpath(sf_dir))}|{mult}x"
+    corpus_key = _corpus_key(sf_dir, mult, spark.sparkContext.defaultParallelism)
     print(f"==== corpus {corpus_key}: {n_docs} docs ====", flush=True)
 
     cells: dict[str, float] = {}
@@ -278,7 +288,7 @@ def main() -> int:
     cpu_probe_end = _cpu_probe()
     probe_divergent = _probe_divergent(cpu_probe, cpu_probe_end)
 
-    # band check vs prior artifacts (probe-normalized, bench.py rule)
+    # band check vs prior artifacts (probe-normalized)
     bands = _recorded_scale_bands(corpus_key)
     lo, hi = PROBE_RATIO_CLAMP
     violations: dict[str, dict[str, float]] = {}

@@ -7,9 +7,9 @@ hand-collecting them from sweep logs, pytest output, and sidecars:
 - **staleness**: per-round distribution of each catalog entry's LAST
   driver sample (CORRECTNESS_r*.json), plus never-sampled and
   latest-red name lists — the drain the rotation key works through.
-- **bands**: worst per-query ratio of the latest round's bench timings
-  vs the probe-rescaled recorded bands (the 2× BASELINE.md bound), and
-  the latest run's host-state fields (probe pair, contended flag).
+- **bands**: the latest bench record's totals (``value``,
+  ``value_first_pass``), per-pass spread fields and host-state fields
+  (probe pair, load, steal, contended flag), with no cross-round ratio.
 - **sweeps**: summaries parsed from check_oracle stdout logs passed as
   ``--sweep LABEL=path`` (the `N exact-match, M rows-only, K failed`
   tail line plus any failed entry names).
@@ -65,8 +65,9 @@ def staleness() -> dict:
 
 
 def bands() -> dict:
-    import bench
-
+    """The latest BENCH_r*.json's totals, per-pass spread fields and
+    host-state fields, as recorded. No cross-round ratio: records from
+    other hosts and core counts are not comparable."""
     paths = sorted(
         glob.glob(os.path.join(REPO, "BENCH_r*.json")), key=_round_no
     )
@@ -79,50 +80,26 @@ def bands() -> dict:
         return {"error": f"{latest}: {e}"}
     if isinstance(rec.get("parsed"), dict):
         rec = rec["parsed"]
-    sf = rec.get("sf")
-    probe = rec.get("cpu_probe_sec")
-    recorded = bench._recorded_bands(sf)
-    worst = None
-    ratios = {}
-    for name, sec in (rec.get("queries") or {}).items():
-        band_rec = recorded.get(name)
-        if not band_rec or not isinstance(sec, (int, float)):
-            continue
-        band, band_probe = band_rec
-        scale = 1.0
-        if band_probe and probe:
-            lo, hi = bench.PROBE_RATIO_CLAMP
-            scale = min(hi, max(lo, probe / band_probe))
-        ratio = round(sec / (band * scale), 3) if band else None
-        if ratio is not None:
-            ratios[name] = ratio
-            if worst is None or ratio > worst[1]:
-                worst = (name, ratio)
-    top5 = dict(sorted(ratios.items(), key=lambda kv: -kv[1])[:5])
-    return {
-        "latest_record": os.path.basename(latest),
-        "sf": sf,
-        "headline_sec": rec.get("value"),
-        "cpu_probe_sec": probe,
-        "cpu_probe_sec_end": rec.get("cpu_probe_sec_end"),
-        "probe_divergent": rec.get("probe_divergent"),
-        "contended": rec.get("contended"),
-        "n_retries": rec.get("n_retries"),
-        "worst_band_ratio": {"query": worst[0], "ratio": worst[1]}
-        if worst
-        else None,
-        "top5_band_ratios": top5,
+    keys = (
+        "sf", "value", "value_first_pass",
+        # per-pass spread
+        "suite_unstable", "n_suite_attempts", "idle_gate_loads",
+        # host state
+        "cpu_probe_sec", "cpu_probe_sec_end", "probe_divergent",
+        "load_avg_t0", "load_avg_start", "load_avg_end", "steal_pct",
+        "contended",
+    )
+    return {"latest_record": os.path.basename(latest)} | {
+        k: rec.get(k) for k in keys
     }
 
 
 def scale_bands() -> dict:
     """Latest BENCH_SCALE_r*.json vs the best probe-normalized prior
     cell recordings (VERDICT r11 task 5 — the 100× cipher cells get
-    round-over-round diffs like the sf0.1 headline). The band rule and
-    the per-cell ratios mirror bands()."""
-    from bench_scale import _recorded_scale_bands
-
-    import bench
+    round-over-round diffs like the sf0.1 headline). Bands apply only
+    to records with the same corpus key, which carries the core count."""
+    from bench_scale import PROBE_RATIO_CLAMP, _recorded_scale_bands
 
     paths = sorted(
         glob.glob(os.path.join(REPO, "BENCH_SCALE_r*.json")), key=_round_no
@@ -144,7 +121,7 @@ def scale_bands() -> dict:
         band, band_probe = band_rec
         scale = 1.0
         if band_probe and probe:
-            lo, hi = bench.PROBE_RATIO_CLAMP
+            lo, hi = PROBE_RATIO_CLAMP
             scale = min(hi, max(lo, probe / band_probe))
         if band:
             ratios[name] = round(sec / (band * scale), 3)
