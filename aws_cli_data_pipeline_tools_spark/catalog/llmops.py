@@ -745,8 +745,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Clustered-fixture generation constants — shared verbatim by the Spark
-#: builder below, the DuckDB ground-truth replay in tools/check_oracle.py,
-#: and tools/ann_clustered_curve.py. 32 planted clusters; noise/3 gives
+#: builder below and the DuckDB ground-truth replay in
+#: tools/check_oracle.py (the recall curves on this fixture are in
+#: BASELINE.md). 32 planted clusters; noise/3 gives
 #: expected within-cluster cosine 1/(1+1/9) = 0.9 (centroid and noise
 #: components both uniform(-1,1) iid ⇒ E|C|² = 9·E|N/3|²).
 CLUSTERED_K = 32
@@ -1418,14 +1419,10 @@ def embedding_cluster_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("list_id")
     )
-    # The profile is ≤16 rows by construction; materialize it here so the
-    # corpus-sized exploded cache inside kmeans_clusters can be
-    # released deterministically (ADVICE r12) instead of lingering until
-    # the ContextCleaner notices the plan is gone. Rebuilding from the
-    # collected rows keeps the returned frame free of any reference to
-    # the cached lineage; the compare is row-order-insensitive.
+    # The profile is ≤16 rows by construction; collecting it and
+    # rebuilding a one-slice frame skips the range sort's sampling job
+    # and 32-task exchange (see _localized_sorted).
     rows = prof.collect()
-    labeled.release_cache()
     return _localized_sorted(spark, rows, prof.schema, "list_id")
 
 
@@ -2080,7 +2077,7 @@ GROUP BY 1, 2 ORDER BY id_a, id_b
     "rolling hash mod 2^64 in an Arrow-batched kernel emitting "
     "per-doc-unique postings (no DISTINCT shuffle) — measured 2.1x the "
     "former md5-portable mode at the 10x boilerplate stress "
-    "(tools/stress_boilerplate.py, BASELINE.md r7). Hash values are "
+    "(BASELINE.md r7). Hash values are "
     "internal: the oracle replays the pipeline on EXACT raw 32-char "
     "substrings (stronger than the old hash-for-hash md5 replay — zero "
     "oracle-side collision surface; a Spark-side 64-bit collision would "

@@ -97,7 +97,7 @@ def order_domain_skew(
 #: ``n_buckets / AUTO_SKEW_DIVISOR`` (default 256/32 = 8) — i.e. when
 #: the middle half of all rows would fill fewer than 32 of the 256
 #: range-mode buckets, a ≥4x occupancy imbalance vs balanced binning.
-#: Measured crossover in tools/stress_cumdist.py: range mode collapses
+#: Measured crossover (BASELINE.md r6): range mode collapses
 #: (7.77 s vs quantile 2.88 s at a 6M power-law domain, r in the
 #: thousands) while TPC-H's near-normal domains (r ≈ 3–7 at sf0.1,
 #: BASELINE.md r7) stay comfortably in range mode, which costs one
@@ -144,8 +144,8 @@ def binned_cumsum(
     ``sum(value.cast(decimal(38,10))) OVER (...)`` for cumulative
     magnitudes below 10^18 (the local+prefix addition is performed at
     decimal(28,10) so decimal Add never trips Spark's precision-loss
-    scale reduction — verified by tools/stress_cumdist.py's exceptAll
-    parity at every measured size, 15k through 6M domain rows).
+    scale reduction — verified by exceptAll parity at every measured
+    size, 15k through 6M domain rows, BASELINE.md r6).
 
     Cost model (measured, BASELINE.md r6): the naive single-task window
     is ~4× FASTER below ~300k domain rows (one in-memory sort beats two
@@ -165,8 +165,8 @@ def binned_cumsum(
     count-of-edges-≤-x), so ordering exactness is unchanged. Only
     massive tie mass (one value holding a large corpus fraction) can
     still concentrate a bucket — that mass would occupy adjacent ranks
-    in ANY exact formulation. Measured on a power-law domain in
-    tools/stress_cumdist.py. ``"auto"`` spends one cheap probe
+    in ANY exact formulation. Measured on a power-law domain
+    (BASELINE.md r6). ``"auto"`` spends one cheap probe
     (:func:`order_domain_skew` — min/max/IQR of the order column, a
     1-row collect) and picks quantile iff the skew ratio exceeds
     ``n_buckets / AUTO_SKEW_DIVISOR`` — the documented rule for catalog

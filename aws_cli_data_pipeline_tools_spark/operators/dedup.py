@@ -969,11 +969,10 @@ def _pointer_jump(stepped: DataFrame) -> DataFrame:
     label1). label1 is always some node's id (labels start as ids and
     min only moves between them) and label(x) ≤ x, so the looked-up
     llabel can only lower label1. Returns (id, label, changed). Split
-    out (r11) so the mixed-graph A/B in tools/stress_clusters_mixed.py
-    can time plain propagation by patching this with the identity
-    projection — the jump costs one label-keyed self-join per round,
-    and the A/B records when its O(log diameter) round saving pays for
-    that."""
+    out (r11) so the mixed-graph A/B (BASELINE.md r11) could time plain
+    propagation by patching this with the identity projection — the
+    jump costs one label-keyed self-join per round, and the A/B records
+    when its O(log diameter) round saving pays for that."""
     lab_map = stepped.select(
         F.col("id").alias("lid"), F.col("label1").alias("llabel")
     )

@@ -936,9 +936,7 @@ def kmeans_clusters(
     identical 10-decimal-rounded addends exactly, so fold-vs-group-sum
     order is immaterial, and the final round/divide expressions are
     unchanged. The corpus never shuffles and nothing corpus-sized is
-    cached anymore (the r12 xe-cache leak class is gone by construction);
-    ``release_cache`` is kept as a no-op for the documented caller
-    contract.
+    cached anymore (the r12 xe-cache leak class is gone by construction).
     """
     src = corpus.filter(F.col(vec_col).isNotNull())
     cents = _portable_centroid_literals(
@@ -970,7 +968,7 @@ def kmeans_clusters(
             "__r1"
         ),
     )
-    out = step.select(
+    return step.select(
         F.col(id_col),
         F.col("__r1")["list_id"].alias("list_id"),
         F.round(
@@ -982,10 +980,6 @@ def kmeans_clusters(
             6,
         ).alias("cos_to_centroid"),
     )
-    # no corpus-sized cache remains in this shape; the attribute stays so
-    # existing callers' release_cache() contract keeps working unchanged
-    out.release_cache = lambda blocking=False: None
-    return out
 
 
 def _sign_on(seed: str):

@@ -73,63 +73,11 @@ def scratch_dir(prefix: str) -> str:
     return path
 
 
-#: Per-row-compute parallelism floor (r13 optimization round, guide
-#: §2.5 "repartition immediately after the read"): every fixture parquet
-#: file is ONE row group, so a scan stage is ONE task no matter the core
-#: count and every HEAVY per-row pipeline (regex text stats, shingle
-#: hashing, decimal folds, Arrow decode kernels) serializes on one core
-#: until the first exchange (``spark.sql.files.minPartitionNum`` cannot
-#: help — parquet only splits at row-group boundaries). ``fan_out`` is
-#: applied INSIDE the operators whose per-row work dominates — NOT
-#: blanket in load_table: an A/B at sf0.1 measured blanket fan-out
-#: slowing every aggregation/join-shaped query by 0.3-2 s (the extra
-#: round-robin exchange moves raw rows and destroys the single-partition
-#: partial-aggregation dedup win for count_distinct/sketch aggregates:
-#: profile_lineitem_hll 3.4→5.4 s) while the per-row-heavy operators
-#: gained 2-3.5× (text_byte_entropy 2.8→0.8 s).
-#: Scale posture: the floor is ``defaultParallelism`` (no local-core
-#: constant) and inputs already at least that wide pass through
-#: untouched, so a real 100 TB scan never gains a shuffle.
-#: ``SPARK_GRAFT_SCAN_FANOUT=off`` disables it; an integer pins the
-#: width (the un-underscored ``SPARKGRAFT_SCAN_FANOUT`` spelling is
-#: honored too — both naming conventions already exist in the repo, see
-#: SPARKGRAFT_DRIVER_MEM vs SPARK_GRAFT_SF_DIR; ADVICE r13).
-_FANOUT_ENV = "SPARK_GRAFT_SCAN_FANOUT"
-_FANOUT_ENV_LEGACY = "SPARKGRAFT_SCAN_FANOUT"
-
 #: Memo of static partition counts keyed by (application id, resolved
 #: maxPartitionBytes, resolved shuffle partitions, analyzed-plan
 #: semanticHash) — see ``scan_parallelism``.
 _WIDTH_CACHE: dict[tuple[str, int, int, int], int] = {}
 _WIDTH_CACHE_MAX = 4096
-
-
-def _fanout_target(df: DataFrame) -> int | None:
-    """Resolve the fan-out width from the env override, or None for
-    off. Garbage values (non-numeric, < 1) fall back to auto with one
-    warning — they used to raise ``ValueError``/error inside every
-    operator call (ADVICE r13)."""
-    mode = os.environ.get(
-        _FANOUT_ENV, os.environ.get(_FANOUT_ENV_LEGACY, "auto")
-    )
-    if mode == "off":
-        return None
-    if mode != "auto":
-        try:
-            pinned = int(mode)
-        except ValueError:
-            pinned = 0
-        if pinned >= 1:
-            return pinned
-        import warnings
-
-        warnings.warn(
-            f"{_FANOUT_ENV}={mode!r} is not 'off', 'auto' or an integer "
-            ">= 1 - falling back to auto",
-            RuntimeWarning,
-            stacklevel=3,
-        )
-    return df.sparkSession.sparkContext.defaultParallelism
 
 
 def _sql_conf(spark: SparkSession):
@@ -207,17 +155,26 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a narrow frame up to the cluster's
     default parallelism, applied only when the input has fewer
-    partitions (see the module note above). Row placement never affects
-    the engine's results: consumers are per-row expressions, order-free
-    (decimal-disciplined) aggregations, and total-order top-k phases.
-    Streaming frames pass through untouched. Scan-level frames only:
-    the width probe reads the static pre-AQE partition count (see
-    ``scan_parallelism``)."""
+    partitions, so a large scan never gains a shuffle.
+
+    Why: every fixture parquet file is ONE row group, so a scan stage is
+    ONE task no matter the core count, and every heavy per-row pipeline
+    (regex text stats, shingle hashing, decimal folds, Arrow decode
+    kernels) serializes on one core until the first exchange. Operators
+    whose per-row work dominates call this; ``load_table`` does not: an
+    A/B at sf0.1 measured those operators gaining 2-3.5×
+    (text_byte_entropy 2.8→0.8 s) while blanket fan-out slowed
+    aggregation/join-shaped queries by 0.3-2 s (profile_lineitem_hll
+    3.4→5.4 s).
+
+    Row placement never affects the engine's results: consumers are
+    per-row expressions, order-free (decimal-disciplined) aggregations,
+    and total-order top-k phases. Streaming frames pass through
+    untouched. Scan-level frames only: the width probe reads the static
+    pre-AQE partition count (see ``scan_parallelism``)."""
     if df.isStreaming:
         return df
-    target = _fanout_target(df)
-    if target is None:
-        return df
+    target = df.sparkSession.sparkContext.defaultParallelism
     if scan_parallelism(df) < target:
         return df.repartition(target)
     return df

@@ -416,8 +416,8 @@ def write_avro(df, path: str, codec: str = "deflate") -> int:
     return len(done)
 
 
-#: Avro->Spark DDL type map for the supported subset (single source of
-#: truth — read_avro, the DataSource, and pyds all build DDL from this).
+#: Avro->Spark DDL type map for the supported subset (the one source
+#: of read_avro's DDL).
 _AVRO_TO_SPARK = {
     "boolean": "boolean", "int": "int", "long": "long",
     "float": "float", "double": "double", "string": "string",
@@ -427,10 +427,7 @@ _AVRO_TO_SPARK = {
 
 def peek_schema(path: str):
     """Driver-side schema peek at the first container under ``path``:
-    returns (fields, backtick-quoted DDL string). Shared by read_avro,
-    AvroFallbackDataSource.schema and sources/pyds.py — the two previous
-    verbatim copies had already drifted in their validation (r10
-    review)."""
+    returns (fields, backtick-quoted DDL string) for ``read_avro``."""
     import glob as globmod
 
     files = sorted(globmod.glob(f"{path}/part-*.avro"))

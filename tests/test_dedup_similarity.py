@@ -436,10 +436,6 @@ def test_kmeans_clusters_portable_matches_semantics(spark, sf_dir):
     out2 = kmeans_clusters(emb, n_centroids=8)
     a = out1.collect()
     b = out2.collect()
-    # corpus-sized exploded cache must be releasable by the caller
-    # (ADVICE r12 — accumulating persisted frames in long sessions)
-    out1.release_cache()
-    out2.release_cache()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert {r.list_id for r in a} <= set(range(8))
     assert len(a) == emb.filter(F.col("embedding").isNotNull()).count()
@@ -1654,22 +1650,6 @@ def test_ivf_nullsafe_join_matches_equijoin_with_null_vectors(spark):
         per_q.setdefault(r["query_id"], []).append(r["rank"])
     for q, ranks in per_q.items():
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), q
-
-
-def test_kmeans_portable_release_cache_contract(spark):
-    import random
-
-    random.seed(3)
-    emb = spark.createDataFrame(
-        [(i, [random.uniform(-1, 1) for _ in range(6)]) for i in range(30)],
-        "vec_id long, embedding array<float>",
-    )
-    out = similarity.kmeans_clusters(emb, n_centroids=3, refine_iters=1)
-    assert hasattr(out, "release_cache")
-    rows = out.collect()
-    out.release_cache()  # must be callable post-action (no-op now)
-    assert len(rows) == 30
-    assert {r["list_id"] for r in rows} <= {0, 1, 2}
 
 
 def _r13_trainer_replica(spark, corpus, id_col, vec_col, k, iters):

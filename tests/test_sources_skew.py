@@ -257,60 +257,17 @@ def test_write_jsonl_shards_roundtrip_and_caps(spark, tmp_path, sf_dir):
     assert got == want
 
 
-def test_avro_fallback_python_datasource(spark, tmp_path):
-    """The Spark 4 Python DataSource route (spark.read.format(
-    'avro_fallback')) must return exactly what write_avro wrote, with
-    one input partition per container file."""
-    import datetime
-
-    from aws_cli_data_pipeline_tools_spark.sources.avro_fallback import (
-        write_avro,
-    )
-    from aws_cli_data_pipeline_tools_spark.sources.pyds import (
-        register_avro_fallback,
-    )
-
-    rows = [
-        (1, "alpha", 1.5, datetime.datetime(2024, 1, 15, 12, 30, 45)),
-        (2, None, -0.25, None),
-        (3, "gamma", 0.0, datetime.datetime(1970, 1, 1)),
-    ]
-    df = spark.createDataFrame(
-        rows, "k bigint, s string, d double, ts timestamp"
-    ).repartition(2)
-    path = str(tmp_path / "avro_ds")
-    write_avro(df, path)
-
-    register_avro_fallback(spark)
-    register_avro_fallback(spark)  # idempotent re-register
-    back = spark.read.format("avro_fallback").load(path)
-    assert back.schema.simpleString() == (
-        "struct<k:bigint,s:string,d:double,ts:timestamp>"
-    )
-    got = sorted((tuple(r) for r in back.collect()), key=lambda t: t[0])
-    want = sorted((tuple(r) for r in df.collect()), key=lambda t: t[0])
-    assert got == want
-    # one partition per container file
-    assert back.rdd.getNumPartitions() == len(
-        __import__("glob").glob(f"{path}/part-*.avro")
-    )
-
-
 def test_avro_fallback_stores_utc_micros(spark, tmp_path):
     """r8 review: Avro timestamp-micros is UTC by spec, but the writer
     stored session-LOCAL naive wall-clock micros — any external reader
-    (and the datasource route, which labels micros UTC) saw values
-    shifted by the session-tz offset. Pin a non-UTC session timezone and
-    check the raw container bytes carry the true UTC instant, with both
-    read routes returning the original wall clock."""
+    saw values shifted by the session-tz offset. Pin a non-UTC session
+    timezone and check the raw container bytes carry the true UTC
+    instant, with read_avro returning the original wall clock."""
     import datetime
     import glob as globmod
 
     from aws_cli_data_pipeline_tools_spark.sources.avro_fallback import (
         _parse_container, read_avro, write_avro,
-    )
-    from aws_cli_data_pipeline_tools_spark.sources.pyds import (
-        register_avro_fallback,
     )
 
     tz_key = "spark.sql.session.timeZone"
@@ -333,14 +290,10 @@ def test_avro_fallback_stores_utc_micros(spark, tmp_path):
         # session tz that's true_micros + 5h, a 5-hour shift for every
         # external reader.
         assert raw_rows[0][1].value // 1000 == true_micros
-        # both read routes return the same instant
+        # the read returns the same instant
         back = read_avro(spark, path)
         assert back.select(F.unix_micros("ts")).collect()[0][0] == true_micros
         assert back.collect() == df.collect()
-        register_avro_fallback(spark)
-        ds = spark.read.format("avro_fallback").load(path)
-        assert ds.select(F.unix_micros("ts")).collect()[0][0] == true_micros
-        assert ds.collect() == df.collect()
     finally:
         spark.conf.set(tz_key, old_tz)
 
@@ -377,12 +330,9 @@ def test_avro_fallback_nan_is_a_value_not_null(spark, tmp_path):
 def test_avro_fallback_mixed_field_order_files(spark, tmp_path):
     """r8 review: each container decodes with its OWN header field order;
     a second writer's different order used to land values under the
-    wrong column names with no error (both read routes)."""
+    wrong column names with no error."""
     from aws_cli_data_pipeline_tools_spark.sources.avro_fallback import (
         _container_bytes, read_avro, write_avro,
-    )
-    from aws_cli_data_pipeline_tools_spark.sources.pyds import (
-        register_avro_fallback,
     )
 
     df = spark.createDataFrame([(1, 10)], "a bigint, b bigint").coalesce(1)
@@ -395,12 +345,6 @@ def test_avro_fallback_mixed_field_order_files(spark, tmp_path):
         f.write(swapped)  # sorts after the real part file → not the peek
     got = {r.a: r.b for r in read_avro(spark, path).collect()}
     assert got == {1: 10, 2: 20}
-    register_avro_fallback(spark)
-    ds = {
-        r.a: r.b
-        for r in spark.read.format("avro_fallback").load(path).collect()
-    }
-    assert ds == {1: 10, 2: 20}
 
 
 def test_salt_is_content_derived_and_stable(spark):
@@ -488,8 +432,8 @@ def test_avro_fallback_r10_review_fixes(spark, tmp_path):
     empty frame WITH schema instead of FileNotFoundError; (c) dotted
     column names work end-to-end (literal-name discipline); (d) a
     re-write to the same path with fewer partitions leaves no stale
-    parts; (e) the DataSource route rejects same-name/different-type
-    containers instead of yielding wrongly-typed values."""
+    parts; (e) read_avro rejects same-name/different-type containers
+    instead of yielding wrongly-typed values."""
     import glob
     import os
 
@@ -523,12 +467,8 @@ def test_avro_fallback_r10_review_fixes(spark, tmp_path):
     assert n1 < n8
     assert read_avro(spark, p).count() == 3
 
-    # (e) mixed-type directory rejected by the DataSource route
+    # (e) mixed-type directory rejected
     import pytest as _pytest
-
-    from aws_cli_data_pipeline_tools_spark.sources.pyds import (
-        register_avro_fallback,
-    )
 
     p3 = str(tmp_path / "mixed")
     write_avro(spark.createDataFrame([(1,)], "x bigint").coalesce(1), p3)
@@ -546,9 +486,8 @@ def test_avro_fallback_r10_review_fixes(spark, tmp_path):
         os.path.join(p3, "part-00000.avro") + ".keep",
         os.path.join(p3, "part-00000.avro"),
     )
-    register_avro_fallback(spark)
     with _pytest.raises(Exception, match="schema mismatch"):
-        spark.read.format("avro_fallback").load(p3).collect()
+        read_avro(spark, p3).collect()
 
 
 def test_sources_floor_and_nfiles_guards_r10(spark, tmp_path):
@@ -610,12 +549,6 @@ def test_fan_out_never_repartitions_down(spark):
     target = spark.sparkContext.defaultParallelism
     df = spark.range(10_000).repartition(target + 7)
     assert fan_out(df).rdd.getNumPartitions() == target + 7
-
-
-def test_fan_out_env_off(spark, monkeypatch):
-    monkeypatch.setenv("SPARKGRAFT_SCAN_FANOUT", "off")
-    df = spark.range(100).coalesce(1)
-    assert fan_out(df).rdd.getNumPartitions() == 1
 
 
 def test_fan_out_streaming_passthrough(spark, tmp_path):

@@ -1,7 +1,7 @@
-"""Shared fixture + measurement helpers for the multi-scale stress tools.
+"""Shared fixture + measurement helpers for the scale tools.
 
-One copy of the three things every scale-curve measurement must agree on
-(stress_boilerplate.py, stress_minhash_decon.py, stress_ann_scale.py):
+One copy of the three things every scale measurement must agree on
+(bench_scale.py, measure_shuffle_bytes.py, measure_ann_spill.py):
 
 - **The cipher-replication fixture.** Replica i rewrites characters by a
   seeded random permutation of ``ALPHA`` via ``F.translate`` — a
@@ -12,11 +12,11 @@ One copy of the three things every scale-curve measurement must agree on
   therefore grows exactly N× (linear) as the corpus grows N×. The r8
   fixture studies that motivated this (shifted-id replication collapses
   to 0 pairs once N exceeds a posting cap; word-interleaving
-  manufactures 24× new cross-doc windows) live in
-  stress_boilerplate.py's docstring. Keeping the permutation seed
-  (``7_000 + i``) and alphabet HERE, in one place, is what keeps the
-  "same cipher fixture" claim across the three tools true by
-  construction rather than by parallel maintenance.
+  manufactures 24× new cross-doc windows) are recorded in BASELINE.md.
+  Keeping the permutation seed (``7_000 + i``) and alphabet HERE, in one
+  place, is what keeps the "same cipher fixture" claim across the tools
+  and the BASELINE.md curves true by construction rather than by
+  parallel maintenance.
 
 - **Baseline parity.** ``materialize()`` gives EVERY scale point —
   including 1× — the same repartition(32) + persist + count treatment,
@@ -26,14 +26,12 @@ One copy of the three things every scale-curve measurement must agree on
   every recorded exponent low and producing spurious negative 10×
   exponents that had to be explained away as warmup).
 
-- **The measurement protocol.** ``timed`` (wall + row count printed),
-  ``exponent`` (log(tN/t1)/log N), ``parse_mults`` (the --mults flag,
-  base 1 required).
+- **The measurement protocol.** ``timed`` (wall + row count printed)
+  and ``parse_mults`` (the --mults flag, base 1 required).
 """
 
 from __future__ import annotations
 
-import math
 import random
 import time
 
@@ -74,10 +72,6 @@ def timed(label: str, action, repeat: int = 1) -> float:
     return best
 
 
-def exponent(t: dict[int, float], mult: int) -> float:
-    return math.log(t[mult] / t[1]) / math.log(mult)
-
-
 def materialize(df: DataFrame) -> DataFrame:
     """repartition(32) + persist + count — applied to EVERY scale point
     (1× included) so all exponent numerators and denominators pay
@@ -100,23 +94,18 @@ def cipher_replicated(
     mult: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cipher: bool = True,
 ) -> DataFrame:
     """The N× text corpus: replica i = (id + i*SHIFT, translate(text,
-    perm_i)); ``cipher=False`` degrades to plain shifted-id replication
-    (kept for the fixture-failure demos in stress_boilerplate.py).
-    Returns the raw plan — callers pass it through ``materialize()``."""
+    perm_i)). Returns the raw plan — callers pass it through
+    ``materialize()``."""
     out = base
     for i in range(1, mult):
-        text = (
-            F.translate(F.col(text_col), ALPHA, cipher_perm(i))
-            if cipher
-            else F.col(text_col)
-        )
         out = out.unionAll(
             base.select(
                 (F.col(id_col) + i * SHIFT).alias(id_col),
-                text.alias(text_col),
+                F.translate(F.col(text_col), ALPHA, cipher_perm(i)).alias(
+                    text_col
+                ),
             )
         )
     return out
@@ -130,9 +119,9 @@ def disable_width_probing() -> None:
     the r10 refactor the jaccard/containment posting+pair widths call
     ``_probed_widths`` directly, and a tool patching the narrow helper
     silently leaves those widths ON in its supposedly-unwidened arm
-    (the r11 stress_ngram_index fix). Keeping the patch here means the
-    next probe-body refactor has one place to break loudly instead of
-    two to break silently."""
+    (an r11 fix). Keeping the patch here means the next probe-body
+    refactor has one place to break loudly instead of two to break
+    silently."""
     from aws_cli_data_pipeline_tools_spark.operators import dedup
 
     dedup._probed_widths = (

@@ -200,8 +200,8 @@ def main() -> int:
     corpus.unpersist()
 
     if "clusters_mixed" in ops:
-        # pointer-jump cell: K5 cliques + one deep chain (the
-        # stress_clusters_mixed shape, parameters in the cell name)
+        # pointer-jump cell: K5 cliques + one deep chain (the r11
+        # mixed-graph shape of BASELINE.md, parameters in the cell name)
         base = spark.range(CLIQUES).select(F.col("id").alias("c"))
         edges = None
         for i in range(5):

@@ -1,7 +1,7 @@
 """Spill audit for the similarity/ANN family at 100× (VERDICT r11 task 6)
 — closing the loop the r11 round closed for the eight dedup heavies.
 
-Fixture: the stress_ann_scale replication (vec_id shift, identical
+Fixture: the ANN scale replication of BASELINE.md (vec_id shift, identical
 vectors per replica — constant IVF geometry, only volume grows) over the
 sf0.1 embeddings base; 100× = 200k vectors. Measured ops, at the
 catalog/bench operating points:
